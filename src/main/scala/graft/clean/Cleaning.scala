@@ -29,9 +29,15 @@ object Cleaning {
   def normalizeName(c: String): String =
     c.replace(" ", "_").replaceAll("[()]", "")
 
-  /** Bulk rename via a single projection (no per-column plan nodes). */
+  /** Bulk rename via a single projection (no per-column plan nodes) that
+    * aliases only the columns whose names change: Catalyst's constraint
+    * propagation grows about 1.7x per aliased column on every re-plan, so
+    * a wide frame (the reference's 61 year columns) must keep its
+    * unchanged columns un-aliased to stay plannable.
+    */
   def normalizeColumnNames(df: DataFrame): DataFrame =
-    df.select(df.columns.map(c => col(s"`$c`").alias(normalizeName(c))).toSeq: _*)
+    df.withColumnsRenamed(df.columns.iterator
+      .map(c => c -> normalizeName(c)).filter { case (c, n) => c != n }.toMap)
 
   /** C1: drop rows where every column is null (`df.na.drop('all')`). */
   def dropAllNullRows(df: DataFrame): DataFrame = df.na.drop("all")
@@ -46,8 +52,8 @@ object Cleaning {
     * frame plus (stage, rowsAfter) counts — the programmatic form of the
     * reference's printed count audits.
     *
-    * Note: each count is an action; at 100 TB you run this on samples or
-    * rely on `observe()` metrics instead — see [[auditedPipeline]].
+    * Note: each count is an action, one job per stage; at 100 TB you run
+    * this on samples.
     */
   def runAudited(df: DataFrame, stages: Seq[Stage]): (DataFrame, Seq[(String, Long)]) = {
     var cur = df
@@ -58,17 +64,6 @@ object Cleaning {
       counts += (s.name -> cur.count())
     }
     (cur, counts.result())
-  }
-
-  /** Scale-friendly variant of [[runAudited]]: attaches
-    * `observe(count)` metrics per stage so a *single* pass computes all
-    * stage counts (read back from the QueryExecutionListener / observed
-    * metrics) instead of one job per stage.
-    */
-  def auditedPipeline(df: DataFrame, stages: Seq[Stage]): DataFrame = {
-    var cur = df.observe("input", count(lit(1)).as("rows"))
-    stages.foreach { s => cur = s.op(cur).observe(s.name, count(lit(1)).as("rows")) }
-    cur
   }
 
   /** P4-style validity predicate: fixed-length code column. */

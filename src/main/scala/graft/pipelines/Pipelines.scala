@@ -24,8 +24,9 @@ import graft.versioned.VersionedTable
   *    table (`lakehouse_data_igestion.py`): enforced append, cast/rename
   *    repair, evolving append.
   *
-  * All stages are lazy DataFrame transforms until the final write; the
-  * audit variant uses `observe()` so counting costs no extra pass.
+  * All stages are lazy DataFrame transforms until the final write, except
+  * [[curate]]'s audit, which runs one count job per stage
+  * ([[graft.clean.Cleaning.runAudited]]).
   */
 object Pipelines {
 

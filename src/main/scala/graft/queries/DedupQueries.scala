@@ -230,9 +230,14 @@ object DedupQueries {
     // sum of position hashes mod 2^48 (order-free integer, replayed
     // exactly in the oracle); chunks whose (signature, length) recurs
     // in ANOTHER doc are cross-doc duplicates — sub-document dedup at
-    // the granularity storage dedup uses. At 100 TB: one narrow
-    // gram-explode (no shuffle), one per-doc window, one hash-agg per
-    // chunk, one signature-count join — no all-pairs anywhere.
+    // the granularity storage dedup uses. Plan: documents are
+    // hash-partitioned by doc_id BEFORE the gram explode, so the
+    // generator runs on every core and the per-doc window and per-chunk
+    // aggregate reuse that partitioning (the one shuffle carries
+    // documents, not grams); the cross-doc test is a window over
+    // (sig, clen) on the chunk rows, not a self-join, so the
+    // explode→window→aggregate subtree runs once. Every later shuffle
+    // carries chunk rows. No all-pairs anywhere.
     Q("q307_cdc_chunking", Q.sql(s"""
         WITH d AS (
           SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm
@@ -263,7 +268,10 @@ object DedupQueries {
         GROUP BY 1 ORDER BY doc_id"""))(
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
+        // an explicit partition count: AQE would coalesce a by-column
+        // repartition of a small file back into one task
         val d = T(s, dir, "documents")
+          .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
           .select(col("doc_id"), TextAnalysis.normalizeText(col("text")).as("norm"))
         // per-position 8-char window hashes; docs under 8 chars emit no
         // grams (sequence(1,0) would step BACKWARD in Spark — emit an
@@ -285,12 +293,15 @@ object DedupQueries {
           .agg(count(lit(1)).as("clen"),
             (sum(col("h")).cast("decimal(38,0)") % lit(1L << 48))
               .cast("long").as("sig"))
-        val dup = ch.groupBy("sig", "clen")
-          .agg(countDistinct(col("doc_id")).as("n_docs"))
-        ch.join(dup, Seq("sig", "clen"))
+        // a (sig, clen) shared by two doc_ids is a cross-doc duplicate:
+        // min != max over its window is count(DISTINCT doc_id) > 1; the
+        // null-sig filter keeps the oracle's inner-join semantics
+        val bySig = Window.partitionBy("sig", "clen")
+        ch.where(col("sig").isNotNull)
+          .withColumn("dup", min(col("doc_id")).over(bySig) =!= max(col("doc_id")).over(bySig))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_chunks"),
-            sum(when(col("n_docs") > 1, 1L).otherwise(0L)).as("n_dup_chunks"),
+            sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_chunks"),
             round(sum(col("clen")).cast("double") / count(lit(1)), 6)
               .as("avg_chunk_len"))
           .orderBy("doc_id")

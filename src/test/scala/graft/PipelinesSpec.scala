@@ -43,6 +43,39 @@ class PipelinesSpec extends SparkSpec {
       Seq("Country_Name", "Country_Code", "Indicator_Code", "2018", "2019")
   }
 
+  test("curate: a WDI-width frame (61 year columns) plans and writes with golden counts") {
+    // the reference's WDI table: 4 id columns + 1960..2020. Aliasing every
+    // column in the rename made constraint propagation grow ~1.7x per
+    // column, so this never finished; only renamed columns may be aliased.
+    val years = (1960 to 2020).map(_.toString)
+    val ids = Seq("Country Name", "Country Code", "Indicator Name", "Indicator Code")
+    val schema = StructType((ids ++ years).map(StructField(_, StringType)))
+    def row(name: String, code: String, ind: String, v: Int) =
+      Row((Seq(name, code, s"$ind name", ind) ++ years.map(y => s"${v + y.toInt}")): _*)
+    val rows = Seq(
+      row("France", "FRA", "POP", 1), row("France", "FRA", "POP", 1),  // duplicate
+      row("France", "FRA", "GDP", 2), row("Germany", "DEU", "POP", 3),
+      row("Bad", "XX", "POP", 4),                                       // 2-char code
+      row("Spaced", "ESP", "GDP X", 5),                                 // space in code
+      Row(Seq.fill(ids.size + years.size)(null): _*))                   // all-null
+    val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val out = tmpDir("wdi61") + "/curated"
+    val (curated, counts) = Pipelines.curate(raw,
+      Pipelines.CurateConfig(
+        validityFilters = Seq(
+          Cleaning.codeLengthIs(col("Country_Code"), 3),
+          Cleaning.noSpaces(col("Indicator_Code"))),
+        outPath = Some(out)))
+    counts shouldBe Seq(
+      "input" -> 7L, "normalize_names" -> 7L, "drop_all_null" -> 6L,
+      "dedup" -> 5L, "validity_0" -> 4L, "validity_1" -> 3L)
+    curated.columns.toSeq shouldBe
+      Seq("Country_Name", "Country_Code", "Indicator_Name", "Indicator_Code") ++ years
+    val back = spark.read.parquet(out)
+    back.count() shouldBe 3
+    back.where(col("Country_Code") === "DEU").select("2020").head().getString(0) shouldBe "2023"
+  }
+
   test("serve: unpivot + group-avg + top-k, golden shape") {
     val (curated, _) = Pipelines.curate(rawWdi,
       Pipelines.CurateConfig(validityFilters = Seq(

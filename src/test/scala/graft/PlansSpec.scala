@@ -240,6 +240,47 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("q307 chunks in one pass: one documents scan, no join, no exchange between explode and window") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // a self-contained fixture: the plan shape does not depend on the data
+    val dir = tmpDir("q307")
+    val shared = "the quick brown fox jumps over the lazy dog " * 12
+    Seq((1L, shared), (2L, shared),
+        (3L, "pack my box with five dozen liquor jugs, then weigh it twice"),
+        (4L, "short"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val df = SparkEntry.queries("q307_cdc_chunking")(spark, dir)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    withClue(s"q307 plan:\n$plan\n") {
+      plan.collect { case f: FileSourceScanExec => f }.size shouldBe 1
+      plan.collect { case j: BaseJoinExec => j } shouldBe empty
+      val gen = plan.collect { case g: GenerateExec => g }
+      gen.size shouldBe 1
+      // the generator runs on documents hash-partitioned by doc_id ...
+      gen.head.collect { case e: ShuffleExchangeExec => e }.size shouldBe 1
+      // ... and the per-doc (ORDER BY pos) window reuses that partitioning
+      val perDoc = plan.collect { case w: WindowExec if w.orderSpec.nonEmpty => w }
+      perDoc.size shouldBe 1
+      perDoc.head.collect {
+        case e: ShuffleExchangeExec if e.exists(_.isInstanceOf[GenerateExec]) => e
+      } shouldBe empty
+    }
+    // the (sig, clen) window marks chunks shared across doc_ids: the two
+    // identical documents have every chunk duplicated, the others none
+    val got = df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    got.keySet shouldBe Set(1L, 2L, 3L)
+    got(1L) shouldBe got(2L)
+    got(1L)._2 shouldBe got(1L)._1
+    got(3L)._2 shouldBe 0L
+  }
+
   /** Root paths of every file scan in the frame's analyzed plan. */
   private def scanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}

@@ -38,8 +38,11 @@ class SlicedWassersteinSpec extends SparkSpec {
     raw.map(_ / nrm)
   }
 
+  // u(f) costs 2 * Dim md5 digests: derive each direction once
+  private lazy val dirs: IndexedSeq[Array[Double]] = (1 to D).map(u)
+
   private def project(emb: Array[Float], f: Int): Double = {
-    val uv = u(f)
+    val uv = dirs(f - 1)
     var dot = 0.0
     var i = 0
     while (i < Dim) { dot += emb(i).toDouble * uv(i); i += 1 }
@@ -47,15 +50,29 @@ class SlicedWassersteinSpec extends SparkSpec {
   }
 
   /** Exact two-sample 1-D W1: integrate |F_a − F_b| over the merged
-    * support (the sorted-CDF formula).
+    * support (the sorted-CDF formula), as one sort-merge sweep. F_a and
+    * F_b are exact integer counts of samples <= v over the sample sizes,
+    * and the terms are summed in ascending v from 0.0.
     */
   private def w1Exact(a: Seq[Double], b: Seq[Double]): Double = {
-    val vals = (a ++ b).distinct.sorted
-    vals.iterator.zip(vals.iterator.drop(1)).map { case (v, nxt) =>
-      val fa = a.count(_ <= v).toDouble / a.size
-      val fb = b.count(_ <= v).toDouble / b.size
-      math.abs(fa - fb) * (nxt - v)
-    }.sum
+    val (sa, sb) = (a.toArray.sorted, b.toArray.sorted)
+    var (i, j) = (0, 0)
+    var acc = 0.0
+    def next: Double =
+      if (i == sa.length) sb(j)
+      else if (j == sb.length) sa(i)
+      else math.min(sa(i), sb(j))
+    while (i < sa.length || j < sb.length) {
+      val v = next
+      while (i < sa.length && sa(i) <= v) i += 1
+      while (j < sb.length && sb(j) <= v) j += 1
+      if (i < sa.length || j < sb.length) {
+        val fa = i.toDouble / sa.length
+        val fb = j.toDouble / sb.length
+        acc += math.abs(fa - fb) * (next - v)
+      }
+    }
+    acc
   }
 
   /** The query's quantized form, independently: 256 bins over the
