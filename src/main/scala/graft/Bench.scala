@@ -18,21 +18,13 @@ import org.apache.spark.sql.SparkSession
   * single sequential session accrues state, so the full-set per-query
   * average crept ~16% as the registry grew (BASELINE.md) — a
   * set-size-dependent bias in the gate metric. When the selected set
-  * exceeds `SPARK_GRAFT_BENCH_SEGMENT` queries (default 100; 0
-  * disables), the run is split into chunks whose accumulation is
-  * bounded by the chunk size. Two isolation strengths
-  * (`SPARK_GRAFT_BENCH_MODE`):
-  *  - `restart` (default): tear down and rebuild the SparkSession +
-  *    SparkContext between chunks in THIS JVM. Spark-side accumulation
-  *    (codegen cache, block manager, listener/UI state) resets; the
-  *    JIT stays hot, so no chunk re-pays interpreter/compile warmup.
-  *  - `fork`: one fresh child JVM per chunk (same flags/classpath,
-  *    strictly sequential), results via temp file, crash-safe
-  *    fallback. Strongest isolation, but each chunk re-pays JIT
-  *    warmup — measured +~30 s per chunk at sf0.001 (0.6 s/query), so
-  *    this mode only makes sense when chunks are long or queries are
-  *    heavy.
-  *  - `off`: monolithic single session (the pre-round-13 behavior).
+  * exceeds `SPARK_GRAFT_BENCH_SEGMENT` queries (default 100), the run is
+  * split into chunks, and the SparkSession + SparkContext are torn down
+  * and rebuilt between chunks in THIS JVM (`segment_mode` `restart`).
+  * Spark-side accumulation (codegen cache, block manager, listener/UI
+  * state) resets; the JIT stays hot, so no chunk re-pays interpreter/
+  * compile warmup. `SPARK_GRAFT_BENCH_SEGMENT=0` (or a set that fits in
+  * one chunk) runs one monolithic session (`segment_mode` `off`).
   */
 object Bench {
 
@@ -46,31 +38,20 @@ object Bench {
     * 5–24× calm while the structural leaders sat at 1.4–1.6×) is then
     * identifiable from the record file ALONE — no committed calm detail
     * file or same-day probe needed. Written to the details JSON, never
-    * the size-capped stdout contract line. Fork-mode stamps are taken
-    * around the child process, so they include the child's JVM startup.
+    * the size-capped stdout contract line.
     */
   private val chunkStamps = scala.collection.mutable.ArrayBuffer[String]()
 
   private def stamp(first: String, last: String, n: Int, wallSec: Double,
-                    loadStart: Double, loadEnd: Double,
-                    retimed: Boolean = false): Unit = {
+                    loadStart: Double, loadEnd: Double): Unit = {
     def f(v: Double) =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    // a crash-recovery re-time covers a possibly NON-contiguous set that
-    // overlaps an already-stamped fork range; the flag keeps the chunk
-    // ranges in the details JSON interpretable (ADVICE r15)
-    val tail = if (retimed) ""","retimed":true""" else ""
-    chunkStamps.synchronized {
-      val _ = chunkStamps += s"""{"first":"$first","last":"$last","n":$n,""" +
-        s""""wall":${f(wallSec)},"load_start":${f(loadStart)},""" +
-        s""""load_end":${f(loadEnd)}$tail}"""
-    }
+    val _ = chunkStamps += s"""{"first":"$first","last":"$last","n":$n,""" +
+      s""""wall":${f(wallSec)},"load_start":${f(loadStart)},""" +
+      s""""load_end":${f(loadEnd)}}"""
   }
 
-  /** The sorted, SPARK_GRAFT_ONLY-filtered query list — identical in
-    * parent and child (both derive it from the registry + env), so a
-    * chunk's (start, count) means the same slice in both processes.
-    */
+  /** The sorted, SPARK_GRAFT_ONLY-filtered query list. */
   private def selectedQueries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -107,7 +88,7 @@ object Bench {
     */
   private def timeQueries(sfDir: String,
       qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-      restartEvery: Int = 0, retimed: Boolean = false)
+      restartEvery: Int = 0)
       : Seq[(String, Double)] = {
     if (restartEvery > 0 && qs.size > restartEvery)
       return qs.grouped(restartEvery).toSeq.flatMap { slice =>
@@ -144,7 +125,7 @@ object Bench {
     }
     if (qs.nonEmpty)
       stamp(qs.head._1, qs.last._1, qs.size,
-        (System.nanoTime() - chunkT0) / 1e9, chunkLoad0, loadAvg(), retimed)
+        (System.nanoTime() - chunkT0) / 1e9, chunkLoad0, loadAvg())
     timed
   }
 
@@ -201,92 +182,8 @@ object Bench {
     }
   }
 
-  /** Fork one fresh JVM per chunk (sequentially) and collect its timed
-    * results; returns None when forking isn't viable so the caller can
-    * fall back to in-process timing.
-    */
-  private def runSegmented(sfDir: String, names: Seq[String],
-                           chunk: Int): Option[Seq[(String, Double)]] = {
-    val javaBin = new java.io.File(
-      new java.io.File(System.getProperty("java.home"), "bin"), "java")
-    val cp = System.getProperty("java.class.path", "")
-    // under a non-forked classloader launcher the classpath property
-    // doesn't carry the app classes — segmenting is impossible, so the
-    // monolithic path must take over rather than children that die on
-    // ClassNotFound
-    if (!javaBin.isFile || cp.isEmpty || !cp.contains("classes")) return None
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    try {
-      names.grouped(chunk).zipWithIndex.foreach { case (slice, i) =>
-        val out = java.nio.file.Files
-          .createTempFile(s"graft_bench_chunk$i", ".tsv")
-        val start = i * chunk
-        val cmd = new java.util.ArrayList[String]()
-        val _ = cmd.add(javaBin.getAbsolutePath)
-        jvmArgs.forEach(a => { val _ = cmd.add(a) })
-        Seq("-cp", cp, "graft.Bench", "__chunk", start.toString,
-          slice.size.toString, out.toString)
-          .foreach(a => { val _ = cmd.add(a) })
-        val pb = new ProcessBuilder(cmd)
-        // child stderr joins the parent's (Spark log noise stays
-        // visible/attributable); child stdout is discarded so nothing
-        // can land after the parent's contract line in the driver's
-        // stdout tail window
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-        val l0 = loadAvg()
-        val t0 = System.nanoTime()
-        val rc = pb.start().waitFor()
-        stamp(slice.head, slice.last, slice.size,
-          (System.nanoTime() - t0) / 1e9, l0, loadAvg())
-        if (rc != 0)
-          System.err.println(s"[bench] chunk $i exited rc=$rc; " +
-            "missing queries will be re-timed in-process")
-        java.nio.file.Files.readAllLines(out).forEach { line =>
-          line.split('\t') match {
-            case Array(n, s) => results(n) = s.toDouble
-            case _ => ()
-          }
-        }
-        java.nio.file.Files.deleteIfExists(out)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] segmentation failed (${e.getMessage}); " +
-        "falling back to in-process")
-      return None
-    }
-    // a crashed child reports nothing for its remaining slice: re-time
-    // those in-process rather than inventing failures
-    val missing = names.filterNot(results.contains)
-    if (missing.nonEmpty) {
-      System.err.println(s"[bench] re-timing ${missing.size} queries " +
-        "missed by crashed chunks")
-      val byName = selectedQueries.toMap
-      timeQueries(sfDir, missing.map(n => n -> byName(n)), retimed = true)
-        .foreach { case (n, s) => results(n) = s }
-    }
-    Some(names.map(n => n -> results(n)))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    // child mode: time slice [start, start+count) of the selected list,
-    // write name\tsec lines, exit. No contract line, nothing on stdout.
-    args match {
-      case Array("__chunk", start, count, outPath) =>
-        val slice = selectedQueries.slice(start.toInt,
-          start.toInt + count.toInt)
-        val timed = timeQueries(sfDir, slice)
-        val body = timed.map { case (n, s) => s"$n\t$s" }
-          .mkString("", "\n", "\n")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), body)
-        sys.exit(0)
-      case _ => ()
-    }
-
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 1-minute system load average, sampled before and after the run: the
     // driver benches on a shared box (documented 2-6x co-tenant swings),
@@ -296,13 +193,6 @@ object Bench {
     val selected = selectedQueries
     val segment = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEGMENT", "100")
     val chunk = scala.util.Try(segment.toInt).getOrElse(100)
-    // segmentation mode: "restart" (default) rebuilds the SparkSession
-    // per chunk in THIS JVM — resets Spark-side accumulation while the
-    // JIT stays hot; "fork" spawns a fresh child JVM per chunk — the
-    // strongest isolation, but each chunk re-pays JIT warmup, which at
-    // sf0.001 (~0.6 s/query) measured +30 s per chunk and inverted the
-    // trade; "off" = monolithic.
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "restart")
     // staging state at run start (marker-complete graft_staged_* dirs
     // under the stage root): committed record totals differ ~10-12 s
     // between cold and warm staged bases, so the adjudication record
@@ -314,21 +204,11 @@ object Bench {
         .count(d => d.isDirectory && d.getName.startsWith("graft_staged_") &&
           new java.io.File(d, "_graft_staged").exists())
     }
-    // effMode records what actually RAN: the fork path silently degrades
-    // to a monolithic session when forking isn't viable, and a run whose
-    // set fits in one chunk never segments — the JSON must not claim
-    // isolation that did not happen (ADVICE r13).
-    var effMode = mode
-    val results: Seq[(String, Double)] =
-      if (chunk <= 0 || selected.size <= chunk || mode == "off") {
-        effMode = "off"
-        timeQueries(sfDir, selected)
-      } else if (mode == "fork")
-        runSegmented(sfDir, selected.map(_._1), chunk).getOrElse {
-          effMode = "off"
-          timeQueries(sfDir, selected)
-        }
-      else timeQueries(sfDir, selected, restartEvery = chunk)
+    // segment_mode records what actually RAN: a set that fits in one
+    // chunk never segments, so the JSON must not claim isolation that did
+    // not happen (ADVICE r13).
+    val segmentMode = if (chunk > 0 && selected.size > chunk) "restart" else "off"
+    val results = timeQueries(sfDir, selected, restartEvery = chunk)
 
     val total = results.map(_._2).filter(_ >= 0).sum
     val nFailed = results.count(_._2 < 0)
@@ -377,7 +257,7 @@ object Bench {
       else s""","query_env_overrides":${overrides.mkString("{", ",", "}")}"""
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","failed":$nFailed""" +
       s""","load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadAvg())}""" +
-      s""","cpus":$cpus,"segment":$chunk,"segment_mode":"$effMode","staged_dirs":$stagedDirs""" +
+      s""","cpus":$cpus,"segment":$chunk,"segment_mode":"$segmentMode","staged_dirs":$stagedDirs""" +
       overridesJson
     // the contract line prints FIRST — a failed details-file write (bad
     // cwd, full disk) must never cost the driver its bench JSON.
@@ -396,16 +276,12 @@ object Bench {
     // per-chunk wall/load stamps make a loaded window adjudicable from
     // the record file alone (round-14 verdict item 2); details-only —
     // the stdout line is size-capped
-    val chunksJson = chunkStamps.synchronized {
-      chunkStamps.mkString("[", ",", "]")
-    }
+    val chunksJson = chunkStamps.mkString("[", ",", "]")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(detailsPath),
       s"""{$head,"chunks":$chunksJson,"queries":$qsFull,"sf":"$sfDir"}"""
         .getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    // in the segmented path no SparkSession exists in the parent; stop
-    // only what was actually started
     SparkSession.getActiveSession.foreach(_.stop())
   }
 }

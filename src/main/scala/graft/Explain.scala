@@ -5,15 +5,18 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: print the formatted physical plan and wall time of one
   * registered query. Usage: Explain <queryName> <sfDir> [reps]
   * (reps > 1 separates codegen/JIT warmup from steady-state execution).
+  * Runs at `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle
+  * partitions, the same setting as [[Bench]] and [[Verify]].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val reps = if (args.length > 2) args(2).toInt else 1
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]").appName("graft-explain")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")

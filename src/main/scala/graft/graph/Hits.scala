@@ -56,7 +56,7 @@ object Hits {
     // as the auths output), and a caller reading both outputs (q290)
     // would re-execute the whole chain without one. Cache exactly that
     // frame — cache, not checkpoint: it feeds a broadcast()-hinted
-    // join, and NoBigBroadcastSpec's lineage trace sees through
+    // join, and PlanInvariantsSpec's lineage trace sees through
     // InMemoryRelation but not a checkpoint's LogicalRDD.
     // h0 = 1 for every src node, so a1 is just the in-degree
     var auth = e.groupBy(col("dst").as("node"))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 
 /** Round-10 batch 15: adoption-curve, network-elite, and histogram-
   * separation operators — the Bass diffusion fit, the rich-club
@@ -13,20 +14,6 @@ import graft.ops.Relational.dsum
   * against DuckDB.
   */
 object AdoptionQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** The q332 house form: exact 4-dp fixed-point daily mass per type. */
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
 
   def all: Seq[Q] = Seq(
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.io.Bucketed
 import graft.ops.Percentiles
 import graft.ops.Relational.dsum
@@ -15,9 +15,6 @@ import graft.ops.Relational.dsum
   * distributions — each oracle-checked bit-for-bit.
   */
 object AnalyticsQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

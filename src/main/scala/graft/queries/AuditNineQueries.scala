@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.sketch.Kmv
 
@@ -13,9 +13,6 @@ import graft.sketch.Kmv
   * oracle-checked bit-for-bit against DuckDB.
   */
 object AuditNineQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** KMV sketch size used by q368/q369. */
   private val KmvK = 256

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.text.TextAnalysis
 
@@ -32,9 +32,6 @@ import graft.text.TextAnalysis
   * and the final rollup is a 10-group conditional aggregation.
   */
 object CapstoneQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val hexBucket =
     s"${PortableSql.hexToLong("md5(CAST(id AS VARCHAR) || 'r3')", 12)} % 1000"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Percentiles
 import graft.ops.Relational.{davg, dsum}
 
@@ -14,9 +14,6 @@ import graft.ops.Relational.{davg, dsum}
   * bit-for-bit against DuckDB.
   */
 object ClassicQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val KCoreK = 3
   private val KCoreRounds = 8

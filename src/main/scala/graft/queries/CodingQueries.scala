@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
+import graft.queries.Bases.wordsCte
 import graft.text.TextAnalysis
 
 /** Round-9 batch 4: information-theoretic corpus statistics and
@@ -15,16 +16,6 @@ import graft.text.TextAnalysis
   * q180_zipf_slope already covers that operator.)
   */
 object CodingQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Shared tokenizer CTE (CurationQueries/InferenceQueries house form). */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   def all: Seq[Q] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational._
 
 /** Core relational queries (SURVEY §2.2, §2.4, §2.5, §2.6, §2.7, §2.8):
@@ -12,9 +12,6 @@ import graft.ops.Relational._
   * count-distinct, rollup/cube.
   */
 object CoreQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
     (

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.dedup.Dedup
 import graft.graph.{Hits, PageRank}
 import graft.ops.Frames.{cached, spread}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.wordsCte
 import graft.sketch.{Bloom, CountMin}
 import graft.streaming.StreamRun
 import graft.text.{Chunking, TextAnalysis}
@@ -21,18 +22,6 @@ import graft.text.{Chunking, TextAnalysis}
   * bit-for-bit against DuckDB.
   */
 object CurationQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Words CTE shared by the text oracles — the exact derivation of
-    * [[TextAnalysis.normalizeText]] + [[TextAnalysis.tokens]].
-    */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   private val SpanN = 5
   private val ChunkW = 32

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Hashing, PortableSql}
 import graft.text.TextAnalysis
 
@@ -32,9 +33,6 @@ import graft.text.TextAnalysis
   * aggregations are plain hash-aggs.
   */
 object CycleCapstoneQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val hexBucket =
     s"${PortableSql.hexToLong("md5(CAST(id AS VARCHAR) || 'r3')", 12)} % 1000"

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.dedup.Dedup
 import graft.functions.PortableSql
 import graft.text.TextAnalysis
@@ -14,9 +14,6 @@ import graft.text.TextAnalysis
   * bit-for-bit (see [[graft.dedup.Dedup]] for the scale design).
   */
 object DedupQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Shared oracle CTEs: normalized words, raw 3-gram shingle occurrences
     * (`shr`), and the distinct string-free (id, shash) set (`sh`) — the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 
 /** Round-5 batch 9: time-weighted averages, Pareto concentration,
@@ -12,9 +12,6 @@ import graft.ops.Relational.dsum
   * dedup — each oracle-checked bit-for-bit against DuckDB.
   */
 object DepthQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Exact half-up integer division floor((a + d/2) / d) for a ≥ 0,
     * 0 < d < 2^53, in DECIMAL(38,0) arithmetic — engine-portable (the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 import graft.ops.Stats
 
@@ -14,9 +14,6 @@ import graft.ops.Stats
   * oracle-checked bit-for-bit vs DuckDB.
   */
 object DiagQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val AcfMaxLag = 14
 

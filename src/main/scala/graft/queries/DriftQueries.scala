@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.graph.CoPurchase
 import graft.ops.Frames.materialize
 import graft.text.TextAnalysis
@@ -14,9 +14,6 @@ import graft.text.TextAnalysis
   * reciprocal-rank fusion — each oracle-checked bit-for-bit vs DuckDB.
   */
 object DriftQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** DuckDB expression for [[TextAnalysis.normalizeText]] (same as
     * TextQueries.normSql — duplicated because that one is query-private).

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{ArrayMath, PortableSql}
 
 /** Rounds 15–16 widening: LINEAR-TIME multivariate two-sample drift
@@ -137,9 +137,6 @@ object EmbeddingDriftQueries {
       PortableSql.round(s"(CASE WHEN nt > n THEN $scaled END)", 6)
         + " AS mmd2_n")
   }
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

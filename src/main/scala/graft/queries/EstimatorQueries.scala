@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 
 /** Round-9 batch 5: estimation and trend machinery — the Mann-Kendall
   * trend test, Cochran's Q, Haar wavelet energy, inverse-propensity
@@ -12,9 +12,6 @@ import graft.Tables
   * DuckDB.
   */
 object EstimatorQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.{Bootstrap, Percentiles}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.wordsCte
 import graft.text.Bm25
 
 /** Round-5 batch 7: evaluation & diagnostics — NDCG ranking quality,
@@ -15,17 +16,6 @@ import graft.text.Bm25
   * against DuckDB.
   */
 object EvalQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Words CTE shared by the text oracles (the
-    * [[graft.text.TextAnalysis]] token derivation). */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   private val Bm25Terms = Seq("table", "spark", "merge")
   private val BootB = 100

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Hashing, PortableSql}
 import graft.ops.Relational.dsum
 import graft.text.TextAnalysis
@@ -15,9 +15,6 @@ import graft.text.TextAnalysis
   * bit-for-bit vs DuckDB.
   */
 object FeatureQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Prefix
 
@@ -14,9 +14,6 @@ import graft.ops.Prefix
   * oracle-checked bit-for-bit against DuckDB.
   */
 object HazardQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Shared daily-revenue series CTE: per-type exact integer cents on
     * the zero-filled calendar spine, pos in [0, n). */

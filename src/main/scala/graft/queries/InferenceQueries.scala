@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
+import graft.queries.Bases.wordsCte
 import graft.text.TextAnalysis
 
 /** Round-9 batch 3: statistical inference + preference modeling —
@@ -17,19 +18,7 @@ import graft.text.TextAnalysis
   */
 object InferenceQueries {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private val Dim = 64
-
-  /** Shared tokenizer CTE (identical to CurationQueries: lower,
-    * whitespace-collapse, split on space).
-    */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   def all: Seq[Q] = Seq(
 

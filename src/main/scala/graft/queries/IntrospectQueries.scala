@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Profile
 
 /** Round-6 batch: the last reference surfaces with no declared-query
@@ -13,9 +13,6 @@ import graft.ops.Profile
   * (`data_import.ipynb.py:22-49`).
   */
 object IntrospectQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Confs the engine pins (or Spark 4 fixes) to known values in every
     * entry point — the deterministic introspection subset. The dynamic

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{PortableSql, StringSim}
 import graft.ops.Relational.dsum
 import graft.text.TextAnalysis
@@ -15,9 +15,6 @@ import graft.text.TextAnalysis
   * each oracle-checked bit-for-bit vs DuckDB.
   */
 object LinkageQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val normSql = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.dedup.Fuzzy
 import graft.functions.PortableSql
 import graft.graph.Triangles
 import graft.ops.Frames.cached
 import graft.ops.Relational.dsum
 import graft.ops.{Stats, TimeSeries}
+import graft.queries.Bases.wordsCte
 import graft.text.{Bm25, TextAnalysis}
 
 /** Round-5 batch 3: grouped statistics (argmax, mode, corr/regression),
@@ -20,18 +21,6 @@ import graft.text.{Bm25, TextAnalysis}
   * DuckDB.
   */
 object MiningQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Words CTE shared by the text oracles — the exact derivation of
-    * [[TextAnalysis.normalizeText]] + [[TextAnalysis.tokens]].
-    */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   private val FuzzyDist = 2
   private val PrefixLen = 12

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.ArrayMath
 import graft.multimodal.Multimodal
 import graft.ops.Relational.dsum
@@ -14,9 +14,6 @@ import graft.ops.Relational.dsum
   * DuckDB.
   */
 object MlopsQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val Dim = 64
   private val FrameStride = 256

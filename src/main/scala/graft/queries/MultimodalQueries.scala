@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.multimodal.Multimodal
 
 /** North-star multimodal query: documents' text treated as an opaque media
@@ -12,9 +12,6 @@ import graft.multimodal.Multimodal
   * native (oracle-checkable) projection.
   */
 object MultimodalQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
     Q("q40_multimodal_meta", Q.sql("""

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 
 /** Round-9 batch: t-closeness (closing the k-anonymity → l-diversity →
@@ -14,9 +14,6 @@ import graft.ops.Relational.dsum
   * reciprocal rank — each oracle-checked bit-for-bit against DuckDB.
   */
 object NineQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** t-closeness threshold (Li et al. ICDE'07 use 0.15–0.2 as examples). */
   private val TClosenessT = 0.2

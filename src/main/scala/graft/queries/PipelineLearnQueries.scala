@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.{Frames, LogReg}
 import graft.text.{BpeTrain, TextAnalysis}
@@ -31,9 +31,6 @@ import graft.text.{BpeTrain, TextAnalysis}
   * shared floor ladder and summed in exact DECIMAL(38,9).
   */
 object PipelineLearnQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---------------------------------------------------------------- q489
 

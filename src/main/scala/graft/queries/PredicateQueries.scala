@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.clean.Cleaning
 import graft.ops.Relational._
 
@@ -13,9 +13,6 @@ import graft.ops.Relational._
   * semantics).
   */
 object PredicateQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

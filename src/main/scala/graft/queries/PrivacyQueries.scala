@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Md5Long, PortableSql}
 
 /** Round-5 batch 22: privacy + featurization — k-anonymity audit of
@@ -12,9 +12,6 @@ import graft.functions.{Md5Long, PortableSql}
   * feature-hashing trick — each oracle-checked bit-for-bit vs DuckDB.
   */
 object PrivacyQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val HashDim = 512
   private val AnonK = 10

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Hashing, PortableSql}
 import graft.ops.{Expectations, RangeJoin}
 import graft.ops.Relational.dsum
@@ -16,9 +16,6 @@ import graft.similarity.Similarity
   * bit-for-bit against DuckDB.
   */
 object QualityQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Tokenized-documents CTE keyed by source (the q111 oracle's input) —
     * the exact derivation of `TextAnalysis.normalizeText` + `tokens`.

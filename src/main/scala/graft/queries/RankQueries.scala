@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 import graft.ops.Stats
 
@@ -18,9 +18,6 @@ import graft.ops.Stats
   * identical doubles and every downstream moment stays decimal-exact.
   */
 object RankQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Midrank = avg(position) within each tie group of `v`; positions
     * come from the distributed prefix (see q203/q205), the averaging

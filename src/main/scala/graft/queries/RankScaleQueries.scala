@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 
 /** Round-11 batch 3: the dispersion/rank corner — Ansari-Bradley
   * (two-sample scale), the Quade test (weighted within-block rank
@@ -15,19 +16,6 @@ import graft.Tables
   * distributed prefix, never a quadratic self-join or global window.
   */
 object RankScaleQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
-
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
 
   def all: Seq[Q] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 
 /** Round-11 batch: three named diagnostics that close the remaining
   * epidemiology/psychometrics/calibration gaps — the Mantel-Haenszel
@@ -14,9 +14,6 @@ import graft.Tables
   * bit-for-bit against DuckDB.
   */
 object ReliabilityTwoQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

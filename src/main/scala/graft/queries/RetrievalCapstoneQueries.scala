@@ -3,10 +3,11 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Frames.cached
 import graft.ops.Relational.dsum
+import graft.queries.Bases.wordsCte
 import graft.similarity.Similarity
 import graft.text.Chunking
 
@@ -40,21 +41,12 @@ import graft.text.Chunking
   */
 object RetrievalCapstoneQueries {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private val Dim = 64
   private val Bits = 4
   private val K = 5
   private val NQ = 20
   private val ChunkW = 32
   private val ChunkS = 24
-
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   def all: Seq[Q] = Seq(
 

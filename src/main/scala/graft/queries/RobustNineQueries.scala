@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 
 /** Round-9 batch 6: robust location, agreement, and diagnostic
   * statistics — the Hodges-Lehmann estimator, Kendall's coefficient of
@@ -13,9 +13,6 @@ import graft.Tables
   * oracle-checked bit-for-bit against DuckDB.
   */
 object RobustNineQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.graph.Assortativity
 import graft.ops.Relational.dsum
 import graft.ops.Trend
@@ -14,9 +14,6 @@ import graft.ops.Trend
   * degree assortativity — each oracle-checked bit-for-bit vs DuckDB.
   */
 object RobustQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** l_extendedprice * (1 - l_discount) — the TPC-H revenue expression. */
   private def rev = col("l_extendedprice") * (lit(1) - col("l_discount"))

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 import graft.text.TextAnalysis
 
 /** Round-10 batch 10: robust-tail, diversity, ranking-cascade,
@@ -15,20 +16,6 @@ import graft.text.TextAnalysis
   * incidence — each oracle-checked bit-for-bit against DuckDB.
   */
 object RobustTenQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** The q332 house form: exact 4-dp fixed-point daily mass per type. */
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
 
   def all: Seq[Q] = Seq(
 
@@ -108,7 +95,7 @@ object RobustTenQueries {
         // events scan instead of five. cache, NOT localCheckpoint:
         // descendants of d carry broadcast hints (hi, f), and a
         // checkpoint's LogicalRDD would hide the domain-keyed lineage
-        // NoBigBroadcastSpec traces (cache boundaries are transparent)
+        // PlanInvariantsSpec traces (cache boundaries are transparent)
         val d = graft.ops.Frames.cached(dailyMass(s, dir).coalesce(4))
         val vc = d.groupBy("event_type", "v").agg(count(lit(1)).as("c"))
         val cum = graft.ops.Prefix.runningTotal(
@@ -141,7 +128,7 @@ object RobustTenQueries {
         // final join — the barrier runs the medcouple kernel (the
         // lo x hi pair window) once. cache, NOT localCheckpoint: f is
         // broadcast-hinted below, and a checkpoint's LogicalRDD would
-        // hide the domain-keyed lineage NoBigBroadcastSpec traces to
+        // hide the domain-keyed lineage PlanInvariantsSpec traces to
         // prove the hint model-sized (cache boundaries are transparent)
         val f = graft.ops.Frames.cached(
           mc.join(broadcast(med), "event_type")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Hashing, PortableSql}
 import graft.ops.{Percentiles, Skyline}
 import graft.streaming.StreamRun
@@ -17,9 +17,6 @@ import graft.text.Dsir
   * each oracle-checked bit-for-bit against DuckDB.
   */
 object SelectionQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val SampleMod = 100
   private val SampleKeep = 25

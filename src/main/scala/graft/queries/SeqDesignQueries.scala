@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 
 /** Round-10 batch 7: sequential testing, survey weighting, queueing,
@@ -14,9 +14,6 @@ import graft.ops.Relational.dsum
   * each oracle-checked bit-for-bit against DuckDB.
   */
 object SeqDesignQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.similarity.{Ivf, Pq, Similarity}
 
@@ -20,9 +20,6 @@ object SimilarityQueries {
   private val LshBits = 8
   private val IvfK = 8
   private val RecallBits = 4
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def cosSql(a: String, b: String) =
     s"round(${PortableSql.cosine(a, b, Dim)}, 6)"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.similarity.Quantize
 import graft.sketch.{Hll, Quantiles}
@@ -15,9 +15,6 @@ import graft.sketch.{Hll, Quantiles}
   * ([[graft.similarity.Quantize]]).
   */
 object SketchQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val HllP = 6
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 
 /** Round-11 batch 2: the stationarity / regression-diagnostics corner —
   * Breusch-Pagan (does the VARIANCE trend with time?), Cook's distance
@@ -16,19 +17,6 @@ import graft.Tables
   * data-dependent denominators.
   */
 object StationarityQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
-
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
 
   private def tIndexed(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("day")

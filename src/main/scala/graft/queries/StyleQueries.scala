@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.text.TextAnalysis
 
 /** Round-9 batch 9: corpus style and keyword mining — RAKE keyword
@@ -12,9 +12,6 @@ import graft.text.TextAnalysis
   * stylometry — each oracle-checked bit-for-bit against DuckDB.
   */
 object StyleQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Shared tokenizer CTE (CurationQueries/InferenceQueries house form). */
   private val wordsCte = """

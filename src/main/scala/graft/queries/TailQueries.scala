@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Relational.dsum
 import graft.sketch.Hll
@@ -16,9 +16,6 @@ import graft.text.TextAnalysis
   * estimator — each oracle-checked bit-for-bit vs DuckDB.
   */
 object TailQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val normSql = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Sampling
 import graft.text.TextAnalysis
@@ -17,9 +17,6 @@ import graft.text.TextAnalysis
   * replace-length trick so no regex dialect is involved in scoring.
   */
 object TextQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** DuckDB expression for the normalized text form
     * ([[TextAnalysis.normalizeText]]).

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
 
 /** Round-5 batch 20: the last five TPC-H shapes — Q2 (min-cost supplier,
@@ -24,9 +24,6 @@ import graft.ops.Relational.dsum
   * integral, revenue sums go through decimal ([[graft.ops.Relational.dsum]]).
   */
 object TpchFinalQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.{Events, Stats}
 import graft.pipelines.Corpus
 import graft.text.TextAnalysis
@@ -17,9 +17,6 @@ import graft.text.TextAnalysis
   * ratio, so every query is oracle-exact (SURVEY §5 determinism rules).
   */
 object TrainPrepQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Shared DuckDB token-count fragment (q30's verified derivation). */
   private val TokSql =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Percentiles
 import graft.ops.Relational.{davg, dsum}
@@ -15,9 +15,6 @@ import graft.sketch.Hll
   * Welch z-test — each oracle-checked bit-for-bit against DuckDB.
   */
 object TrendQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val HllP = 6
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 
 /** Round-14 depth addition: the Epps-Singleton two-sample omnibus — the
   * characteristic-function test the round-13 verdict named as the panel's
@@ -20,16 +20,6 @@ import graft.Tables
   * rounded@9 and summed in exact DECIMAL(38,9).
   */
 object TwoSampleOmnibusQueries {
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
-
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
 
   /** Upper-triangle index pairs of the 4×4 feature covariance. */
   private val esPairs: Seq[(Int, Int)] =

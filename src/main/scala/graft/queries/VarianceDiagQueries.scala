@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
+import graft.queries.Bases.{dailyMass, dailyMassSql}
 
 /** Round-12 widening: the three named-test corners the round-11 verdict
   * listed as the remaining small gaps beside their shipped siblings —
@@ -18,19 +19,6 @@ import graft.Tables
   * order-dependent float reduction.
   */
 object VarianceDiagQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
-
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
 
   /** Round-half-up rational division of exact integers in DECIMAL(38,0)
     * (q330's engine-portable rdiv; DuckDB twin `(a + d // 2) // d`).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.graph.CoPurchase
 import graft.ops.Frames.materialize
 import graft.ops.Relational.dsum
@@ -15,9 +15,6 @@ import graft.ops.Relational.dsum
   * bit-for-bit vs DuckDB.
   */
 object WarehouseQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val BfRounds = 3
 

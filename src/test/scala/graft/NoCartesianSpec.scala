@@ -1,96 +1,25 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.functions._
 
-/** The no-n² invariant, generalized the way the window sweep was
-  * (round-7 verdict ask): EVERY query in [[SparkEntry.queries]] — not a
-  * hand-picked batch — is swept, and a nested-loop-shaped join is legal
-  * ONLY when it is provably model-sized. The check is mechanical, not
-  * an eyeballed name list: a join with no cross-side equality predicate
-  * (the shape Spark must execute as CartesianProduct or
-  * BroadcastNestedLoopJoin) must have at least one side whose row count
-  * the OPTIMIZER can bound statically — `LogicalPlan.maxRows` ≤ 1024 —
-  * which is exactly the scalar-aggregate / literal-frame / fold-id
-  * fan-out pattern (a global agg has maxRows=1, a literal relation its
-  * size) — OR carry an explicit `broadcast()` hint, the codebase's
-  * author-asserted "this frame is model-sized" convention (greppable,
-  * and audited as such: every broadcast cross join ships a bound in its
-  * comment). What can never pass is the raw unhinted data×data join the
-  * optimizer must plan as a CartesianProduct — the q304 defect this
-  * sweep caught on its first run. The few joins bounded by a MODEL
-  * constant the optimizer cannot see and that deliberately do NOT
-  * broadcast carry a justification in [[modelBounded]]. Planning-only:
-  * walking `optimizedPlan` runs the full optimizer without executing a
-  * job, so a new query is covered the moment it is registered.
+/** Invariant 2 of [[PlanInvariantsSpec]] (no unbounded nested loop),
+  * checked on the one registry sweep that spec shares: a nested-loop
+  * join needs a statically bounded or broadcast-hinted side.
   */
 class NoCartesianSpec extends SparkSpec {
-
-  /** Joins whose unbounded-looking side is in fact bounded by a model
-    * constant the optimizer cannot derive. Every entry names the bound;
-    * a data×data nested loop can NOT be allowlisted here.
-    */
-  private val modelBounded: Map[String, String] = Map(
-    "q39_embedding_neardup" ->
-      ("deliberate brute-force all-pairs BASELINE (ground truth for the " +
-        "banded paths); q41/q114/q245 are the LSH/IVF scale paths"),
-    "q220_jw_linkage" ->
-      ("distinct-token all-pairs: Jaro-Winkler has no complete blocking " +
-        "key (unequal-length pairs can score >= 0.7); |vocab| grows " +
-        "sublinearly in the corpus (Heaps' law, measured by q177) and " +
-        "the pair frame is the query's declared output domain")
-  )
-
-  private def crossSideEqui(j: Join): Boolean = {
-    val l = j.left.outputSet
-    val r = j.right.outputSet
-    def eq(a: Expression, b: Expression): Boolean =
-      (a.references.subsetOf(l) && b.references.subsetOf(r)) ||
-        (a.references.subsetOf(r) && b.references.subsetOf(l))
-    def walk(e: Expression): Boolean = e match {
-      case EqualTo(a, b)       => eq(a, b)
-      case EqualNullSafe(a, b) => eq(a, b)
-      case And(a, b)           => walk(a) || walk(b)
-      case _                   => false
-    }
-    j.condition.exists(walk)
-  }
-
-  private def unboundedNestedLoops(df: DataFrame): Seq[Join] = {
-    import org.apache.spark.sql.catalyst.plans.logical.HintInfo
-    def hinted(h: Option[HintInfo]): Boolean =
-      h.exists(_.strategy.exists(_.toString.toUpperCase.contains("BROADCAST")))
-    df.queryExecution.optimizedPlan.collect {
-      case j: Join if !crossSideEqui(j) &&
-        !j.left.maxRows.exists(_ <= 1024) &&
-        !j.right.maxRows.exists(_ <= 1024) &&
-        !hinted(j.hint.leftHint) && !hinted(j.hint.rightHint) => j
-    }
-  }
+  import PlanInvariantsSpec._
 
   test("EVERY declared query: nested-loop joins only against statically bounded sides") {
-    // negative control: a genuine data×data cross join MUST be flagged,
-    // or an optimizer/API change could green this spec forever
-    {
-      val a = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
-      val b = spark.read.parquet("/root/testdata/sf0.001/region.parquet")
-      assert(unboundedNestedLoops(a.crossJoin(b)).nonEmpty,
-        "probe no longer flags a scan×scan cross join")
-      // ...and the legal pattern must NOT be: a global-agg scalar side
-      // has maxRows=1
-      assert(unboundedNestedLoops(
-        a.crossJoin(b.agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n")))).isEmpty,
-        "probe flags the scalar-broadcast fan-out pattern")
-    }
-    val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      spark.catalog.clearCache()
-      val bad = unboundedNestedLoops(SparkEntry.queries(name)(spark, dir))
-      if (bad.isEmpty || modelBounded.contains(name)) None
-      else Some(s"$name: ${bad.size} unbounded nested-loop join(s)")
-    }
-    offenders shouldBe empty
+    // negative control: a genuine data×data cross join MUST be flagged
+    val a = spark.read.parquet(s"$dir/nation.parquet")
+    val b = spark.read.parquet(s"$dir/region.parquet")
+    assert(unboundedNestedLoops(a.crossJoin(b)).nonEmpty,
+      "probe no longer flags a scan×scan cross join")
+    // ...and the legal pattern must NOT be: a global-agg scalar side
+    // has maxRows=1
+    assert(unboundedNestedLoops(
+      a.crossJoin(b.agg(count(lit(1)).as("n")))).isEmpty,
+      "probe flags the scalar-broadcast fan-out pattern")
+    sweep.get.nestedLoops shouldBe empty
   }
 }

@@ -96,7 +96,7 @@ class PlansSpec extends SparkSpec {
     // q453 spectral entropy: the rounded-trig spectrum's harmonics are
     // model frames — at this SF every join must be broadcast-shaped (no
     // cartesian, no shuffle join); the per-type windows are covered by
-    // the NoGlobalWindowSpec sweep
+    // the PlanInvariantsSpec sweep
     locally {
       spark.catalog.clearCache()
       val p = SparkEntry.queries("q453_spectral_entropy")(spark, dir)

@@ -40,7 +40,7 @@ class TpchPlanSpec extends SparkSpec {
   }
 
   test("q240 (Q2): dims broadcast adaptively; at most the min-cost join shuffles at runtime") {
-    // round-11: forced dim hints removed (NoBigBroadcastSpec) — without
+    // round-11: forced dim hints removed (PlanInvariantsSpec) — without
     // CBO the STATIC estimate of a chained dim join is left×right bytes,
     // so the pre-AQE plan legitimately shows shuffle joins; the contract
     // is the RUNTIME one: AQE's real sizes re-broadcast every dim-sized

@@ -68,10 +68,6 @@ def main(argv):
     for c in cchunks:
         tag = f"{c['first']}..{c['last']} (n={c['n']})"
         loads = f"load {c['load_start']}->{c['load_end']}"
-        if c.get("retimed"):
-            print(f"  RETIMED  {tag}  wall={c['wall']}s  {loads}  "
-                  f"(crash-recovery re-time; range may be non-contiguous)")
-            continue
         r = by_first.get(c["first"])
         if r is None:
             print(f"  NO-REF   {tag}  wall={c['wall']}s  {loads}")

@@ -3,7 +3,8 @@
 # timing of the slow-query family at sf0.1 vs the 10x synthetic fixture
 # (tools/make_scale_fixture.py -> scaledata/sf1), 3 reps each via
 # graft.Explain. Run CALM and alone - co-tenant Spark work inflates the
-# numbers ~1.7x. Output: one line per (query, sf) with the rep times.
+# numbers ~1.7x. Output: one line per (query, sf) with the core count
+# (SPARK_GRAFT_CPUS, default 32, read by graft.Explain) and the rep times.
 set -eu
 cd "$(dirname "$0")/.."
 QUERIES="${1:-q450_rich_club q340_ktruss q334_label_propagation \
@@ -25,11 +26,12 @@ mem_for() { # $1 = sf dir -> echoes the Xmx to use
   sz=$(du -sm "$1" 2>/dev/null | cut -f1 || echo 0)
   if [ "${sz:-0}" -ge 2048 ]; then echo 24g; else echo 8g; fi
 }
+CPUS="${SPARK_GRAFT_CPUS:-32}"
 for q in $QUERIES; do
   for sf in $SFDIRS; do
     mem=$(mem_for "$sf")
     t=$(SPARK_DRIVER_MEM="$mem" tools/run.sh graft.Explain "$q" "$sf" 3 \
       2>/dev/null | grep -oE 'time=[0-9.]+' | cut -d= -f2 | paste -sd,)
-    echo "$q $(basename "$sf") mem=$mem $t"
+    echo "$q $(basename "$sf") cpus=$CPUS mem=$mem $t"
   done
 done
