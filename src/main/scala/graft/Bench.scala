@@ -244,21 +244,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // work-changing per-query env overrides (SPARK_GRAFT_Q*, e.g.
-    // SPARK_GRAFT_Q468_BATCHES for SCALE.md knob probes) are stamped into
-    // the record: an override left exported during a record run would
-    // otherwise commit a non-comparable time with nothing revealing it
-    // (ADVICE r15)
-    val overrides = sys.env.filter(_._1.startsWith("SPARK_GRAFT_Q"))
-      .toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-    val overridesJson =
-      if (overrides.isEmpty) ""
-      else s""","query_env_overrides":${overrides.mkString("{", ",", "}")}"""
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","failed":$nFailed""" +
       s""","load_avg_start":${fmt(loadStart)},"load_avg_end":${fmt(loadAvg())}""" +
-      s""","cpus":$cpus,"segment":$chunk,"segment_mode":"$segmentMode","staged_dirs":$stagedDirs""" +
-      overridesJson
+      s""","cpus":$cpus,"segment":$chunk,"segment_mode":"$segmentMode","staged_dirs":$stagedDirs"""
     // the contract line prints FIRST — a failed details-file write (bad
     // cwd, full disk) must never cost the driver its bench JSON.
     // Field order matters: the driver keeps only the LAST ~2000 chars of

@@ -25,7 +25,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def registry: Seq[Q] =
+  private lazy val registry: Seq[Q] =
     CoreQueries.all ++ PredicateQueries.all ++ EventQueries.all ++
       TextQueries.all ++ DedupQueries.all ++ SimilarityQueries.all ++
       MultimodalQueries.all ++ VersionedQueries.all ++ IoQueries.all ++

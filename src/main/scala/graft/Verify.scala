@@ -79,15 +79,12 @@ object Verify {
     //  - a per-query `<outDir>/<name>.sql` sidecar (sibling of the result
     //    dir — NEVER inside it, where it would corrupt a directory-as-dataset
     //    parquet read)
-    //  - a copy of oracle_sql.json at the repo root
     val entries = SparkEntry.oracleSql.toSeq.flatMap { case (k, v) =>
       Seq(k -> v, s"$k.parquet" -> v)
     }
     val json = entries
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    try Files.writeString(Paths.get("/root/repo/oracle_sql.json"), json)
-    catch { case _: Throwable => () }
     SparkEntry.oracleSql.foreach { case (k, v) =>
       Files.writeString(Paths.get(s"$outDir/$k.sql"), v)
     }

@@ -21,14 +21,8 @@ object Catalog {
     val _ = spark.sql(s"DROP DATABASE IF EXISTS `$name` CASCADE")
   }
 
-  def showDatabases(spark: SparkSession): DataFrame =
-    spark.sql("SHOW DATABASES")
-
   def showTables(spark: SparkSession, db: String): DataFrame =
     spark.sql(s"SHOW TABLES IN `$db`")
-
-  def describeTable(spark: SparkSession, table: String): DataFrame =
-    spark.sql(s"DESCRIBE TABLE $table")
 
   def tableExists(spark: SparkSession, table: String): Boolean =
     spark.catalog.tableExists(table)

@@ -6,6 +6,9 @@ import org.apache.spark.storage.StorageLevel
 /** Shared DataFrame plumbing used across operator modules. */
 object Frames {
 
+  /** File inputs smaller than this stay in their scan partitions. */
+  private val spreadMinBytes = BigInt(256L * 1024)
+
   /** Round-robin the frame across all cores — but ONLY when it is
     * under-partitioned. Small parquet files arrive as ONE scan partition
     * (file < maxPartitionBytes), which would run CPU-heavy downstream
@@ -21,13 +24,13 @@ object Frames {
     * the old always-spread behavior (their stats are estimates or the
     * defaultSizeInBytes sentinel, and skipping on those could leave a
     * heavy stage single-threaded). The guard also skips TINY file
-    * inputs (combined bytes below `graft.spread.minBytes`, default
-    * 256 KB): below ~8 KB of input per core there is not enough work
-    * per task to amortize the exchange + task scheduling, and the
-    * repartition measurably SLOWS the sf0.001-class replay (measured
-    * round 16: +0.3..0.4 s per affected query). Reads only optimizer
-    * statistics — plans no job, never touches `.rdd` (which under AQE
-    * would execute upstream stages eagerly).
+    * inputs (combined bytes below [[spreadMinBytes]], 256 KB): below
+    * ~8 KB of input per core there is not enough work per task to
+    * amortize the exchange + task scheduling, and the repartition
+    * measurably SLOWS the sf0.001-class replay (measured round 16:
+    * +0.3..0.4 s per affected query). Reads only optimizer statistics —
+    * plans no job, never touches `.rdd` (which under AQE would execute
+    * upstream stages eagerly).
     */
   def spread(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -35,12 +38,10 @@ object Frames {
     val p = sess.sparkContext.defaultParallelism
     val maxSplit = BigInt(
       math.max(1L, sess.sessionState.conf.filesMaxPartitionBytes))
-    val minBytes = BigInt(
-      sess.conf.get("graft.spread.minBytes", (256L * 1024).toString).toLong)
     val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     val allFiles = leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRelation])
     lazy val bytes = leaves.map(_.stats.sizeInBytes).sum
-    if (allFiles && (bytes / maxSplit >= p || bytes < minBytes)) df
+    if (allFiles && (bytes / maxSplit >= p || bytes < spreadMinBytes)) df
     else df.repartition(p)
   }
 

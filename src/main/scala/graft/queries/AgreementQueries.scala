@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, purchaseClickPool,
+  purchaseClickPoolSql}
 
 /** Round-10 batch 12: distribution-equality and method-agreement
   * operators — the two-sample Anderson-Darling test, partial
@@ -27,11 +28,7 @@ object AgreementQueries {
     // numerators are exact integers, per-rank terms rounded@9 and
     // DECIMAL-summed.
     Q("q435_anderson_darling", Q.sql(s"""
-        WITH d AS ($dailyMassSql),
-        pool AS (
-          SELECT day, v,
-            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS s1
-          FROM d WHERE event_type IN ('purchase', 'click')),
+        $purchaseClickPoolSql,
         nm AS (
           SELECT CAST(sum(s1) AS BIGINT) AS n,
             CAST(sum(1 - s1) AS BIGINT) AS m,
@@ -55,11 +52,7 @@ object AgreementQueries {
             / (CAST(nm.n AS DOUBLE) * nm.m), 6) AS a2
         FROM nm"""))(
       (s, dir) => {
-        val pool = dailyMass(s, dir)
-          .where(col("event_type").isin("purchase", "click"))
-          .select(col("day"), col("v"),
-            when(col("event_type") === "purchase", 1L).otherwise(0L)
-              .as("s1"))
+        val pool = purchaseClickPool(s, dir)
         val nm = pool.agg(sum(col("s1")).as("n"),
           sum(lit(1L) - col("s1")).as("m"), count(lit(1)).as("nn"))
         val withI = graft.ops.Prefix.runningTotal(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
+import graft.queries.Bases.{dailyCents, dailyCentsSql}
 import graft.functions.PortableSql
 import graft.sketch.Kmv
 
@@ -155,12 +156,8 @@ object AuditNineQueries {
     // each RSS and the F ratio are fixed-order double expressions, and
     // only O(1)-magnitude outputs (slopes, F) are rounded — never the
     // big RSS doubles (the q187/q330 big-double-round trap).
-    Q("q370_chow_test", Q.sql("""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
+    Q("q370_chow_test", Q.sql(s"""
+        $dailyCentsSql,
         b AS (
           SELECT min(day) AS d0,
             CAST(max(day) - min(day) AS BIGINT) + 1 AS n
@@ -235,10 +232,7 @@ object AuditNineQueries {
             / ((rss_1 + rss_2) / (n - 4)), 6) AS f_chow
         FROM agg ORDER BY event_type"""))(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
+        val d = dailyCents(s, dir)
         val b = d.agg(min(col("day")).as("d0"),
           (datediff(max(col("day")), min(col("day"))).cast("long") + 1)
             .as("n"))

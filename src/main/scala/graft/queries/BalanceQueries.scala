@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, purchaseClickPool,
+  purchaseClickPoolSql}
 
 /** Round-10 batch 14: causal-diagnostic and randomness operators —
   * the covariate-balance (SMD) table, Kuiper's test, Gwet's AC1, and
@@ -97,11 +98,7 @@ object BalanceQueries {
     // off the same two distributed-prefix passes as q435, both maxima
     // and V one division each.
     Q("q446_kuiper", Q.sql(s"""
-        WITH d AS ($dailyMassSql),
-        pool AS (
-          SELECT day, v,
-            CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS s1
-          FROM d WHERE event_type IN ('purchase', 'click')),
+        $purchaseClickPoolSql,
         nm AS (
           SELECT CAST(sum(s1) AS BIGINT) AS n,
             CAST(sum(1 - s1) AS BIGINT) AS m
@@ -128,11 +125,7 @@ object BalanceQueries {
             / (CAST(nm.n AS DOUBLE) * nm.m), 6) AS kuiper_v
         FROM gaps, nm"""))(
       (s, dir) => {
-        val pool = dailyMass(s, dir)
-          .where(col("event_type").isin("purchase", "click"))
-          .select(col("day"), col("v"),
-            when(col("event_type") === "purchase", 1L).otherwise(0L)
-              .as("s1"))
+        val pool = purchaseClickPool(s, dir)
         val nm = pool.agg(sum(col("s1")).as("n"),
           sum(lit(1L) - col("s1")).as("m"))
         val withI = graft.ops.Prefix.runningTotal(

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, riskSets,
+  riskSetsSql, survivalObs, survivalObsSql}
 
 /** Round-10 batch 4: cohort, agreement, and rank-order diagnostics —
   * restricted mean survival time, the intraclass correlation, Granger
@@ -26,32 +27,9 @@ object CohortRankQueries {
     // distributed prefix, NOT a global window); survival levels reuse
     // q162's rounded@6 exp(Σlog) chain, so the two queries agree
     // exactly; area terms are rounded@6 and DECIMAL-summed.
-    Q("q397_rmst", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
-        horizon AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
-        obs AS (
-          SELECT su.user_id,
-            CAST(floor((coalesce(er.e_us, horizon.h_us) - su.s_us)
-              / 86400000000.0) AS BIGINT) AS t,
-            CASE WHEN er.e_us IS NOT NULL THEN 1 ELSE 0 END AS d
-          FROM su LEFT JOIN er ON su.user_id = er.user_id, horizon),
-        tc AS (
-          SELECT t, CAST(sum(d) AS BIGINT) AS d_t, count(*) AS ending
-          FROM obs GROUP BY 1),
-        risk AS (
-          SELECT t, d_t,
-            CAST((SELECT count(*) FROM obs) -
-              coalesce(sum(ending) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS n_t
-          FROM tc),
+    Q("q397_rmst", Q.sql(s"""
+        $survivalObsSql,
+        $riskSetsSql,
         ev AS (
           SELECT t, d_t, n_t,
             CASE WHEN d_t < n_t
@@ -84,35 +62,13 @@ object CohortRankQueries {
             AS DOUBLE), 6) AS rmst
         FROM segs, tau GROUP BY 2"""))(
       (s, dir) => {
-        val evts = T(s, dir, "events")
-        val su = evts.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = evts.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
-        val horizon = evts.agg(max(unix_micros(col("ts"))).as("h_us"))
-        // materialized: obs feeds three consumers (nTotal, tc, tau) —
-        // without the barrier each re-executes the signup/error join
-        // chain (3x the events scan, pure fixed cost at bench scale)
+        // materialized: obs feeds three consumers (the two counts in
+        // riskSets, tau) — without the barrier each re-executes the
+        // signup/error join chain (3x the events scan, pure fixed cost
+        // at bench scale)
         val obs = graft.ops.Frames.materialize(
-          su.join(er, Seq("user_id"), "left")
-          .crossJoin(broadcast(horizon))
-          .select(
-            floor((coalesce(col("e_us"), col("h_us")) - col("s_us")) /
-              lit(86400000000.0)).cast("long").as("t"),
-            when(col("e_us").isNotNull, 1).otherwise(0).as("d")))
-        val nTotal = obs.agg(count(lit(1)).as("n_total"))
-        val tc = obs.groupBy("t")
-          .agg(sum(col("d")).as("d_t"), count(lit(1)).as("ending"))
-        val risk = graft.ops.Prefix.runningTotal(
-            tc.crossJoin(broadcast(nTotal)), Seq(col("t")),
-            col("ending"), "__cum_end")
-          .select(col("t"), col("d_t"),
-            (col("n_total") - (col("__cum_end") - col("ending")))
-              .cast("long").as("n_t"))
+          survivalObs(T(s, dir, "events")))
+        val (nTotal, risk) = riskSets(obs)
         val ev = risk.where(col("d_t") > 0)
           .select(col("t"), col("d_t"), col("n_t"),
             when(col("d_t") < col("n_t"),

@@ -89,14 +89,9 @@ object CycleCapstoneQueries {
         graft.io.Lake.rm(hconf, root)
         graft.io.Lake.rm(hconf, stage)
         // replay the corpus as FOUR files → four micro-batches: the
-        // stream must converge to the batch answer whatever the split.
-        // SPARK_GRAFT_Q468_BATCHES overrides the count for the SCALE.md
-        // commit-floor probe (wall vs batch COUNT at fixed data volume) —
-        // the oracle is batching-invariant by construction, so any value
-        // answers identically.
-        val nBatches = sys.env.get("SPARK_GRAFT_Q468_BATCHES")
-          .flatMap(v => scala.util.Try(v.toInt).toOption)
-          .filter(_ > 0).getOrElse(4)
+        // stream must converge to the batch answer whatever the split
+        // (the oracle is batching-invariant by construction)
+        val nBatches = 4
         T(s, dir, "documents")
           .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
           .write.mode("overwrite").parquet(stage)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.{riskSets, riskSetsSql, survivalObs,
+  survivalObsSql}
 
 /** Round-5 batch 9: time-weighted averages, Pareto concentration,
   * mutual information, Kaplan-Meier survival, and binary block-level
@@ -166,30 +168,9 @@ object DepthQueries {
     // window over the (tiny) event-time frame; the survival product is
     // exp of a decimal-summed log chain. d=n can only happen at the
     // final time (the risk set empties after it) — emitted as exact 0.
-    Q("q162_survival", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
-        horizon AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
-        obs AS (
-          SELECT su.user_id,
-            CAST(floor((coalesce(er.e_us, horizon.h_us) - su.s_us) / 86400000000.0) AS BIGINT) AS t,
-            CASE WHEN er.e_us IS NOT NULL THEN 1 ELSE 0 END AS d
-          FROM su LEFT JOIN er ON su.user_id = er.user_id, horizon),
-        tc AS (
-          SELECT t, CAST(sum(d) AS BIGINT) AS d_t, count(*) AS ending
-          FROM obs GROUP BY 1),
-        risk AS (
-          SELECT t, d_t,
-            CAST((SELECT count(*) FROM obs) -
-              coalesce(sum(ending) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_t
-          FROM tc),
+    Q("q162_survival", Q.sql(s"""
+        $survivalObsSql,
+        $riskSetsSql,
         ev AS (
           SELECT t, d_t, n_t,
             CASE WHEN d_t < n_t THEN round(ln(1.0 - CAST(d_t AS DOUBLE) / n_t), 6) ELSE 0.0 END AS lt,
@@ -204,35 +185,11 @@ object DepthQueries {
           CASE WHEN collapse = 1 THEN 0.0 ELSE round(exp(cum), 6) END AS survival
         FROM km ORDER BY t"""))(
       (s, dir) => {
-        val ev = T(s, dir, "events")
-        val su = ev.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = ev.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
-        val horizon = ev.agg(max(unix_micros(col("ts"))).as("h_us"))
-        // materialized: obs feeds nTotal and tc — one signup/error join
+        // materialized: riskSets reads obs twice (total and per-time
+        // counts) — one signup/error join
         val obs = graft.ops.Frames.materialize(
-          su.join(er, Seq("user_id"), "left")
-          .crossJoin(broadcast(horizon))
-          .select(
-            floor((coalesce(col("e_us"), col("h_us")) - col("s_us")) /
-              lit(86400000000.0)).cast("long").as("t"),
-            when(col("e_us").isNotNull, 1).otherwise(0).as("d")))
-        val nTotal = obs.agg(count(lit(1)).as("n_total"))
-        val tc = obs.groupBy("t")
-          .agg(sum(col("d")).as("d_t"), count(lit(1)).as("ending"))
-        // exclusive prefix of leavers = inclusive distributed prefix
-        // minus the current row — no unpartitioned window
-        val risk = graft.ops.Prefix.runningTotal(
-            tc.crossJoin(broadcast(nTotal)), Seq(col("t")),
-            col("ending"), "__cum_end")
-          .select(col("t"), col("d_t"),
-            (col("n_total") - (col("__cum_end") - col("ending")))
-              .cast("long").as("n_t"))
+          survivalObs(T(s, dir, "events")))
+        val (_, risk) = riskSets(obs)
         val evt = risk.where(col("d_t") > 0)
           .select(col("t"), col("d_t"), col("n_t"),
             when(col("d_t") < col("n_t"),

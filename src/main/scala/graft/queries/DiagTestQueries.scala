@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, signupError,
+  signupErrorSql}
 
 /** Round-10 batch 1: survival comparison and regression/series
   * diagnostics — the log-rank test, the Durbin-Watson statistic, the
@@ -26,15 +27,8 @@ object DiagTestQueries {
     // fixed-order double. Risk sets come from the distributed prefix
     // over the zero-filled (time × group) grid — calendar-bounded, no
     // unpartitioned window on the Spark side.
-    Q("q380_logrank", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
+    Q("q380_logrank", Q.sql(s"""
+        $signupErrorSql,
         horizon AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
         obs AS (
           SELECT su.user_id % 2 AS g,
@@ -82,14 +76,7 @@ object DiagTestQueries {
         FROM terms"""))(
       (s, dir) => {
         val ev = T(s, dir, "events")
-        val su = ev.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = ev.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
+        val (su, er) = signupError(ev)
         val horizon = ev.agg(max(unix_micros(col("ts"))).as("h_us"))
         val obs = su.join(er, Seq("user_id"), "left")
           .crossJoin(broadcast(horizon))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
+import graft.queries.Bases.{dailyCents, dailyCentsSql}
 
 /** Round-9 batch 5: estimation and trend machinery — the Mann-Kendall
   * trend test, Cochran's Q, Haar wavelet energy, inverse-propensity
@@ -23,12 +24,8 @@ object EstimatorQueries {
     // Everything before z is EXACT integers (daily cents from a decimal
     // sum, the pair sweep is the calendar-bounded 30×30 per-type
     // equi-self-join); z is one fixed-order double.
-    Q("q355_mann_kendall", Q.sql("""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
+    Q("q355_mann_kendall", Q.sql(s"""
+        $dailyCentsSql,
         pr AS (
           SELECT a.event_type,
             CAST(sum(CASE WHEN b.cents > a.cents THEN 1
@@ -59,10 +56,7 @@ object EstimatorQueries {
         JOIN ties t ON t.event_type = p.event_type
         ORDER BY p.event_type"""))(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
+        val d = dailyCents(s, dir)
         val pr = d.as("a")
           .join(d.select(col("event_type"), col("day").as("day2"),
             col("cents").as("cents2")), Seq("event_type"))
@@ -184,11 +178,7 @@ object EstimatorQueries {
             AS DECIMAL(38,0)) AS e
           FROM $to GROUP BY 1)"""
       Q.sql(s"""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
+        $dailyCentsSql,
         b AS (SELECT min(day) AS d0 FROM d),
         spine AS (
           SELECT et.event_type, CAST(gs.pos AS INT) AS pos
@@ -210,10 +200,7 @@ object EstimatorQueries {
         ORDER BY event_type, level""")
     })(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
+        val d = dailyCents(s, dir)
         val b = d.agg(min(col("day")).as("d0"))
         val spine = d.select("event_type").distinct()
           .crossJoin(broadcast(s.range(32).select(col("id").cast("int")

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Prefix
+import graft.queries.Bases.{centsSeries, centsSeriesSql, dailyCents,
+  riskSets, riskSetsSql, survivalObs, survivalObsSql}
 
 /** Round-9 batch 8: long-memory, hazard, and tail diagnostics — the
   * Hurst R/S exponent, the Nelson-Aalen cumulative hazard, a Gumbel
@@ -15,57 +17,18 @@ import graft.ops.Prefix
   */
 object HazardQueries {
 
-  /** Shared daily-revenue series CTE: per-type exact integer cents on
-    * the zero-filled calendar spine, pos in [0, n). */
-  private val seriesCte = """
-    WITH d AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-        CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-          AS cents
-      FROM events GROUP BY 1, 2),
-    b AS (
-      SELECT min(day) AS d0,
-        CAST(max(day) - min(day) AS BIGINT) + 1 AS n
-      FROM d),
-    spine AS (
-      SELECT et.event_type, CAST(gs.pos AS BIGINT) AS pos
-      FROM (SELECT DISTINCT event_type FROM d) et,
-        LATERAL (SELECT unnest(generate_series(0,
-          (SELECT n - 1 FROM b))) AS pos) gs),
-    l0 AS (
-      SELECT sp.event_type, sp.pos,
-        CAST(COALESCE(d.cents, 0) AS BIGINT) AS x
-      FROM spine sp
-      LEFT JOIN d ON d.event_type = sp.event_type
-        AND (d.day - (SELECT d0 FROM b)) = sp.pos)"""
-
-  /** The Spark twin of [[seriesCte]]. */
+  /** The zero-filled daily cents series `l0(event_type, pos, x)` of
+    * [[Bases.centsSeries]], with a barrier after `d` and after `l0`;
+    * its oracle is [[Bases.centsSeriesSql]]. */
   private def series(s: SparkSession, dir: String): DataFrame = {
     // materialized twice: d feeds three consumers (bounds, spine,
     // join) and the returned frame is re-referenced by callers (q373
     // reads it for both bounds and rows) — barriers run the events
     // scan once and keep caller plans flat. The frame is calendar-
     // bounded (|types| x |days|), so the checkpoints are model-sized.
-    val d = graft.ops.Frames.materialize(T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-        .as("cents"))
-      .coalesce(4))
-    val b = d.agg(min(col("day")).as("d0"),
-      (datediff(max(col("day")), min(col("day"))).cast("long") + 1)
-        .as("n"))
-    val spine = d.select("event_type").distinct()
-      .crossJoin(broadcast(b))
-      .select(col("event_type"),
-        explode(sequence(lit(0L), col("n") - 1)).as("pos"))
-    graft.ops.Frames.materialize(spine
-      .join(d.crossJoin(broadcast(b.select(col("d0"))))
-        .select(col("event_type"), datediff(col("day"), col("d0"))
-          .cast("long").as("pos"), col("cents")),
-        Seq("event_type", "pos"), "left")
-      .select(col("event_type"), col("pos"),
-        coalesce(col("cents"), lit(0L)).as("x"))
-      .coalesce(4))
+    val d = graft.ops.Frames.materialize(dailyCents(s, dir).coalesce(4))
+    val (_, l0) = centsSeries(d)
+    graft.ops.Frames.materialize(l0.coalesce(4))
   }
 
   def all: Seq[Q] = Seq(
@@ -81,7 +44,7 @@ object HazardQueries {
     // log2(m) over the 4-point frame (q359 moment routing). Windows
     // are partitioned by (type, m, block).
     Q("q373_hurst_rs", Q.sql(s"""
-        $seriesCte,
+        $centsSeriesSql,
         sz AS (SELECT CAST(m AS BIGINT) AS m FROM (VALUES (5), (10),
           (15), (30)) AS t(m)),
         rows_ AS (
@@ -226,32 +189,9 @@ object HazardQueries {
     // unpartitioned window); hazard terms are rounded@9/@12 and
     // DECIMAL-prefix-summed, so the chain is order-free and
     // bit-reproducible.
-    Q("q374_nelson_aalen", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
-        horizon AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
-        obs AS (
-          SELECT su.user_id,
-            CAST(floor((coalesce(er.e_us, horizon.h_us) - su.s_us)
-              / 86400000000.0) AS BIGINT) AS t,
-            CASE WHEN er.e_us IS NOT NULL THEN 1 ELSE 0 END AS d
-          FROM su LEFT JOIN er ON su.user_id = er.user_id, horizon),
-        tc AS (
-          SELECT t, CAST(sum(d) AS BIGINT) AS d_t, count(*) AS ending
-          FROM obs GROUP BY 1),
-        risk AS (
-          SELECT t, d_t,
-            CAST((SELECT count(*) FROM obs) -
-              coalesce(sum(ending) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS n_t
-          FROM tc),
+    Q("q374_nelson_aalen", Q.sql(s"""
+        $survivalObsSql,
+        $riskSetsSql,
         ev AS (
           SELECT t, d_t, n_t,
             CAST(round(CAST(d_t AS DOUBLE) / n_t, 9) AS DECIMAL(28,9))
@@ -273,34 +213,11 @@ object HazardQueries {
           round(exp(-h), 6) AS fh_survival
         FROM na ORDER BY t"""))(
       (s, dir) => {
-        val ev = T(s, dir, "events")
-        val su = ev.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = ev.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
-        val horizon = ev.agg(max(unix_micros(col("ts"))).as("h_us"))
-        // materialized: obs feeds nTotal and tc — one signup/error join
+        // materialized: riskSets reads obs twice (total and per-time
+        // counts) — one signup/error join
         val obs = graft.ops.Frames.materialize(
-          su.join(er, Seq("user_id"), "left")
-          .crossJoin(broadcast(horizon))
-          .select(
-            floor((coalesce(col("e_us"), col("h_us")) - col("s_us")) /
-              lit(86400000000.0)).cast("long").as("t"),
-            when(col("e_us").isNotNull, 1).otherwise(0).as("d")))
-        val nTotal = obs.agg(count(lit(1)).as("n_total"))
-        val tc = obs.groupBy("t")
-          .agg(sum(col("d")).cast("long").as("d_t"),
-            count(lit(1)).as("ending"))
-        val risk = Prefix.runningTotal(
-            tc.crossJoin(broadcast(nTotal)), Seq(col("t")),
-            col("ending"), "__cum_end")
-          .select(col("t"), col("d_t"),
-            (col("n_total") - (col("__cum_end") - col("ending")))
-              .cast("long").as("n_t"))
+          survivalObs(T(s, dir, "events")))
+        val (_, risk) = riskSets(obs)
         val evt = risk.where(col("d_t") > 0)
           .select(col("t"), col("d_t"), col("n_t"),
             round(col("d_t").cast("double") / col("n_t"), 9)
@@ -402,7 +319,7 @@ object HazardQueries {
     // (DECIMAL(38,0) products); RSS/SE/DF are fixed-order double
     // expressions with only the O(1) outputs rounded (q370 discipline).
     Q("q376_dickey_fuller", Q.sql(s"""
-        $seriesCte,
+        $centsSeriesSql,
         pr AS (
           SELECT event_type, pos, x,
             lag(x) OVER (PARTITION BY event_type ORDER BY pos) AS xl

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, signupError,
+  signupErrorSql}
 
 /** Round-10 batch 8: population and signal diagnostics — the actuarial
   * life table, fixed-effect meta-analysis with Cochran's Q / I²
@@ -27,15 +28,8 @@ object PopulationQueries {
     // never a per-subject window); conditional q̂ᵢ and the survival
     // product reuse the rounded-ln/DECIMAL-prefix/exp chain of q162, so
     // the curves agree where the designs overlap.
-    Q("q416_life_table", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
+    Q("q416_life_table", Q.sql(s"""
+        $signupErrorSql,
         horizon AS (SELECT max(epoch_us(ts)) AS h_us FROM events),
         obs AS (
           SELECT su.user_id,
@@ -79,14 +73,7 @@ object PopulationQueries {
         FROM s ORDER BY iv"""))(
       (s, dir) => {
         val evts = T(s, dir, "events")
-        val su = evts.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = evts.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
+        val (su, er) = signupError(evts)
         val horizon = evts.agg(max(unix_micros(col("ts"))).as("h_us"))
         // materialized: obs feeds nTotal and tc — one signup/error join
         val obs = graft.ops.Frames.materialize(

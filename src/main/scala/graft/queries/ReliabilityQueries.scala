@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, signupError,
+  signupErrorSql}
 import graft.text.TextAnalysis
 
 /** Round-10 batch 13: reliability-engineering and agreement operators —
@@ -98,15 +99,8 @@ object ReliabilityQueries {
     // y = ln(−ln(1−F)) on x = ln(t+1); shape k = slope, scale λ =
     // exp(−α/k) − 1 days. Both axes rounded@6, products rounded@8 and
     // DECIMAL-summed so the OLS moments are order-free.
-    Q("q441_weibull_fit", Q.sql("""
-        WITH su AS (
-          SELECT user_id, min(epoch_us(ts)) AS s_us
-          FROM events WHERE event_type = 'signup' GROUP BY 1),
-        er AS (
-          SELECT e.user_id, min(epoch_us(e.ts)) AS e_us
-          FROM events e JOIN su ON e.user_id = su.user_id
-          WHERE e.event_type = 'error' AND epoch_us(e.ts) > su.s_us
-          GROUP BY 1),
+    Q("q441_weibull_fit", Q.sql(s"""
+        $signupErrorSql,
         obs AS (
           SELECT su.user_id,
             CAST(floor((er.e_us - su.s_us) / 86400000000.0) AS BIGINT)
@@ -142,14 +136,7 @@ object ReliabilityQueries {
         FROM fit"""))(
       (s, dir) => {
         val evts = T(s, dir, "events")
-        val su = evts.where(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("s_us"))
-        val er = evts.where(col("event_type") === "error")
-          .join(su, "user_id")
-          .where(unix_micros(col("ts")) > col("s_us"))
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("e_us"))
+        val (su, er) = signupError(evts)
         val obs = su.join(er, "user_id")
           .select(col("user_id"),
             floor((col("e_us") - col("s_us")) / lit(86400000000.0))

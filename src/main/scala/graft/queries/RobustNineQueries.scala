@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
+import graft.queries.Bases.{centsSeries, centsSeriesSql, dailyCents,
+  dailyCentsSql}
 
 /** Round-9 batch 6: robust location, agreement, and diagnostic
   * statistics — the Hodges-Lehmann estimator, Kendall's coefficient of
@@ -24,12 +26,8 @@ object RobustNineQueries {
     // equi-self-join; Walsh sums stay EXACT integer cents x2, the
     // median comes from the q330 dual-min cumulative trick (window
     // partitioned by type), and the only division is the final /4/100.
-    Q("q362_hodges_lehmann", Q.sql("""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
+    Q("q362_hodges_lehmann", Q.sql(s"""
+        $dailyCentsSql,
         w AS (
           SELECT a.event_type,
             CAST(a.cents + b.cents AS BIGINT) AS w2
@@ -54,10 +52,7 @@ object RobustNineQueries {
           round(CAST(med4 AS DOUBLE) / 4.0 / 100.0, 6) AS hl_estimate
         FROM med ORDER BY event_type"""))(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
+        val d = dailyCents(s, dir)
         val w = d.join(d.select(col("event_type"), col("day").as("day2"),
             col("cents").as("cents2")), Seq("event_type"))
           .where(col("day2") >= col("day"))
@@ -91,12 +86,8 @@ object RobustNineQueries {
     // squared deviations from the mean rank m(k+1)/2 (an exact integer
     // since k+1 is even x m), W = 12S / (m^2 k(k^2-1)) — everything
     // integer until that one final division.
-    Q("q363_kendall_w", Q.sql("""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
+    Q("q363_kendall_w", Q.sql(s"""
+        $dailyCentsSql,
         days AS (SELECT DISTINCT day FROM d),
         types AS (SELECT DISTINCT event_type FROM d),
         cell AS (
@@ -125,10 +116,7 @@ object RobustNineQueries {
             AS kendall_w
         FROM rs r, sdev s ORDER BY r.event_type"""))(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
+        val d = dailyCents(s, dir)
         val days = d.select("day").distinct()
         val types = d.select("event_type").distinct()
         val cell = days.crossJoin(broadcast(types))
@@ -165,27 +153,8 @@ object RobustNineQueries {
     // sf), Q = n(n+2) * sum r_k^2/(n-k) with the per-lag terms
     // rounded@9 and DECIMAL-summed — the multi-lag companion to q210's
     // single-lag ACF and q332's AR(1).
-    Q("q364_ljung_box", Q.sql("""
-        WITH d AS (
-          SELECT event_type, CAST(ts AS DATE) AS day,
-            CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-              AS cents
-          FROM events GROUP BY 1, 2),
-        b AS (
-          SELECT min(day) AS d0,
-            CAST(max(day) - min(day) AS BIGINT) + 1 AS n
-          FROM d),
-        spine AS (
-          SELECT et.event_type, CAST(gs.pos AS BIGINT) AS pos
-          FROM (SELECT DISTINCT event_type FROM d) et,
-            LATERAL (SELECT unnest(generate_series(0,
-              (SELECT n - 1 FROM b))) AS pos) gs),
-        l0 AS (
-          SELECT sp.event_type, sp.pos,
-            CAST(COALESCE(d.cents, 0) AS BIGINT) AS x
-          FROM spine sp
-          LEFT JOIN d ON d.event_type = sp.event_type
-            AND (d.day - (SELECT d0 FROM b)) = sp.pos),
+    Q("q364_ljung_box", Q.sql(s"""
+        $centsSeriesSql,
         st AS (
           SELECT event_type, CAST(sum(x) AS BIGINT) AS sx FROM l0
           GROUP BY 1),
@@ -222,24 +191,8 @@ object RobustNineQueries {
           round(b.n * (b.n + 2) * t.tsum, 6) AS q_lb
         FROM terms t, b ORDER BY t.event_type"""))(
       (s, dir) => {
-        val d = T(s, dir, "events")
-          .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-          .agg(sum(round(col("value") * 100, 0).cast("long")).cast("long")
-            .as("cents"))
-        val b = d.agg(min(col("day")).as("d0"),
-          (datediff(max(col("day")), min(col("day"))).cast("long") + 1)
-            .as("n"))
-        val spine = d.select("event_type").distinct()
-          .crossJoin(broadcast(b))
-          .select(col("event_type"), explode(sequence(lit(0L),
-            col("n") - 1)).as("pos"))
-        val l0 = spine
-          .join(d.crossJoin(broadcast(b.select(col("d0"))))
-            .select(col("event_type"), datediff(col("day"), col("d0"))
-              .cast("long").as("pos"), col("cents")),
-            Seq("event_type", "pos"), "left")
-          .select(col("event_type"), col("pos"),
-            coalesce(col("cents"), lit(0L)).as("x"))
+        val d = dailyCents(s, dir)
+        val (b, l0) = centsSeries(d)
         val st = l0.groupBy("event_type")
           .agg(sum(col("x")).cast("long").as("sx"))
         val dv = l0.join(st, Seq("event_type"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
-import graft.queries.Bases.{dailyMass, dailyMassSql}
+import graft.queries.Bases.{dailyMass, dailyMassSql, purchaseClickPool}
 
 /** Round-10 batch 3: series and association diagnostics — Theil's
   * uncertainty coefficient, the cross-correlation function, Welch's
@@ -256,11 +256,7 @@ object SeriesTestQueries {
               * (nm.n + nm.m)), 6) AS t
         FROM s, nm"""))(
       (s, dir) => {
-        val pool = dailyMass(s, dir)
-          .where(col("event_type").isin("purchase", "click"))
-          .select(col("day"), col("v"),
-            when(col("event_type") === "purchase", 1L).otherwise(0L)
-              .as("s1"))
+        val pool = purchaseClickPool(s, dir)
         val nm = pool.agg(sum(col("s1")).as("n"),
           sum(lit(1L) - col("s1")).as("m"))
         val other = broadcast(pool.select(col("v").as("v2"),

@@ -45,20 +45,26 @@ object Similarity {
   def cosine(a: Column, b: Column, dim: Int): Column =
     dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
-  /** Exact top-k nearest neighbours by cosine for each query vector.
-    * `queries` is expected to be small (broadcast side). Corpus norms are
-    * computed once in the scan projection, not per (query, corpus) pair —
-    * the per-pair work is one dot product.
-    */
   /** Spread CPU-heavy per-pair work across all cores: a small parquet
     * input arrives as ONE scan partition (file < maxPartitionBytes), which
     * would run an O(n²) nested-loop join single-threaded. Round-robin
     * repartition of the streamed side costs one tiny shuffle and
     * parallelizes the quadratic stage.
+    *
+    * Unlike [[graft.ops.Frames.spread]] it has no guard, on purpose: the
+    * callers here do quadratic pair work, so even a tiny input carries a
+    * lot of work per row, and the byte floor of `Frames.spread` would
+    * leave q38's 193 KB `embeddings` scan in one task. (This follows from
+    * reading the code; it has not been measured.)
     */
   private def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
+  /** Exact top-k nearest neighbours by cosine for each query vector.
+    * `queries` is expected to be small (broadcast side). Corpus norms are
+    * computed once in the scan projection, not per (query, corpus) pair —
+    * the per-pair work is one dot product.
+    */
   def knnBruteForce(queries: DataFrame, corpus: DataFrame, k: Int,
                     dim: Int = 64): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"),

@@ -23,7 +23,7 @@ class FramesSpec extends SparkSpec {
   }
 
   test("spread is a no-op below the tiny-input floor") {
-    // sf0.001 lineitem (~117 KB < graft.spread.minBytes 256 KB): the
+    // sf0.001 lineitem (~117 KB < the 256 KB floor): the
     // exchange would cost more than the single-task work it spreads
     val scan = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val out = Frames.spread(scan.select(col("l_orderkey")))
@@ -40,20 +40,19 @@ class FramesSpec extends SparkSpec {
   }
 
   test("spread is a no-op when file leaves already cover the parallelism") {
-    // shrink the split size so the fixture file counts as many splits
-    // (floor disabled so this exercises the split-count branch alone)
+    // shrink the split size so the fixture file counts as many splits;
+    // sf0.1 lineitem (~11 MB) is above the tiny-input floor, so this
+    // exercises the split-count branch alone
     val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1024") // 1 KB
-    spark.conf.set("graft.spread.minBytes", "0")
     try {
-      val scan = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+      val scan = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
       val out = Frames.spread(scan)
       // the plan must be the scan itself — no Exchange on top
       assert(!out.queryExecution.optimizedPlan.toString.contains("Repartition"),
         s"expected no repartition, got:\n${out.queryExecution.optimizedPlan}")
     } finally {
       spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-      spark.conf.unset("graft.spread.minBytes")
     }
   }
 }

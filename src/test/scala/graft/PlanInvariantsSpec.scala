@@ -292,7 +292,6 @@ object PlanInvariantsSpec {
     * to build fails all three tests with its exception.
     */
   private[graft] lazy val sweep: Try[Offenders] = Try(withWindowProbe { captured =>
-    // `SparkEntry.queries` rebuilds the registry on every call: take it once
     val queries = SparkEntry.queries
     val found = queries.keys.toSeq.sorted.map { name =>
       TestSpark.spark.catalog.clearCache()

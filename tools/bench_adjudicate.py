@@ -60,9 +60,6 @@ def main(argv):
           f"mode={cand.get('segment_mode')}")
     print(f"reference {ref_path}  total={ref.get('value')}s "
           f"n={ref.get('n_queries')}")
-    if cand.get("query_env_overrides"):
-        print(f"WARNING: query env overrides active: "
-              f"{cand['query_env_overrides']} — run is non-comparable")
 
     ratios, inflated = [], []
     for c in cchunks:
