@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * Every [[SparkEntry.queries]] entry reads through here so the scan
   * options stay in one place. Tables are plain parquet files, one per
-  * table, at `<sfDir>/<name>.parquet`.
+  * table, at `<sfDir>/<name>.parquet`, read with their footer schema
+  * ([[graft.io.Footers]]) so a load starts no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,9 +34,9 @@ object Tables {
       // with every oracle; callers needing another display zone must
       // convert on read, not re-pin the session.
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+      normalizeTs(graft.io.Footers.read(spark, s"$dir/$name.parquet"))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      graft.io.Footers.read(spark, s"$dir/$name.parquet")
     }
 
   /** ts(long ns | TIMESTAMP_NTZ µs | TIMESTAMP) → TIMESTAMP, µs precision. */

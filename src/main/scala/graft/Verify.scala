@@ -31,7 +31,7 @@ object Verify {
     val rowHashes = scala.collection.mutable.LinkedHashMap[String, String]()
     def canonicalHash(path: String): String = {
       import org.apache.spark.sql.functions.{to_json, struct, col}
-      val df = spark.read.parquet(path)
+      val df = graft.io.Footers.read(spark, path)
       val cols = df.columns.sorted.map(col).toIndexedSeq
       val lines = df.select(to_json(struct(cols: _*)).as("j"))
         .collect().map(_.getString(0)).sorted

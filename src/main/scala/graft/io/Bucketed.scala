@@ -77,8 +77,8 @@ object Bucketed {
                        key: String, nBuckets: Int): Unit = {
     // bucketed CREATE TABLE demands an explicit column list
     // (SPECIFY_BUCKETING_IS_NOT_ALLOWED otherwise) — read it off the
-    // parquet footers; one footer read, no data scan
-    val schemaDdl = spark.read.parquet(path).schema.toDDL
+    // footer of the first bucket file, on the driver: no Spark job
+    val schemaDdl = Footers.schema(spark, path).toDDL
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val _ = spark.sql(s"""CREATE TABLE $table ($schemaDdl) USING parquet
       CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS

@@ -57,7 +57,7 @@ object Readers {
 
   /** S4: parquet scan (`denormalized_tables.py:42-44`). */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Footers.read(spark, path)
 
   /** S5: partition-pruned scan — read the partitioned root and filter on
     * the partition column so only matching directories are listed
@@ -67,6 +67,6 @@ object Readers {
   def parquetPartition(spark: SparkSession, root: String,
                        partitionCol: String, value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    spark.read.parquet(root).where(col(partitionCol) === lit(value))
+    Footers.read(spark, root).where(col(partitionCol) === lit(value))
   }
 }

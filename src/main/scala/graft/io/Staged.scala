@@ -128,7 +128,7 @@ object Staged {
         stageIfNeeded(b, fingerprint(src, version), build)
         b
       })
-    spark.read.parquet(s"$base/data")
+    Footers.read(spark, s"$base/data")
   }
 
   private def stageIfNeeded(b: String, fp: String,

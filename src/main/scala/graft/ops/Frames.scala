@@ -6,8 +6,11 @@ import org.apache.spark.storage.StorageLevel
 /** Shared DataFrame plumbing used across operator modules. */
 object Frames {
 
-  /** File inputs smaller than this stay in their scan partitions. */
-  private val spreadMinBytes = BigInt(256L * 1024)
+  /** File inputs smaller than this stay in their scan partitions, and a
+    * streaming replay gets one state partition per this many input bytes
+    * ([[graft.streaming.StreamRun.statePartitions]]).
+    */
+  val smallInputBytes: Long = 256L * 1024
 
   /** Round-robin the frame across all cores — but ONLY when it is
     * under-partitioned. Small parquet files arrive as ONE scan partition
@@ -24,7 +27,7 @@ object Frames {
     * the old always-spread behavior (their stats are estimates or the
     * defaultSizeInBytes sentinel, and skipping on those could leave a
     * heavy stage single-threaded). The guard also skips TINY file
-    * inputs (combined bytes below [[spreadMinBytes]], 256 KB): below
+    * inputs (combined bytes below [[smallInputBytes]], 256 KB): below
     * ~8 KB of input per core there is not enough work per task to
     * amortize the exchange + task scheduling, and the repartition
     * measurably SLOWS the sf0.001-class replay (measured round 16:
@@ -41,7 +44,7 @@ object Frames {
     val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     val allFiles = leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRelation])
     lazy val bytes = leaves.map(_.stats.sizeInBytes).sum
-    if (allFiles && (bytes / maxSplit >= p || bytes < spreadMinBytes)) df
+    if (allFiles && (bytes / maxSplit >= p || bytes < smallInputBytes)) df
     else df.repartition(p)
   }
 

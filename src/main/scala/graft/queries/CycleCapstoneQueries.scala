@@ -95,7 +95,7 @@ object CycleCapstoneQueries {
         T(s, dir, "documents")
           .repartition(nBatches, pmod(col("doc_id"), lit(nBatches)))
           .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
+        val schema = graft.io.Footers.schema(s, stage)
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(stage)
         val normC = TextAnalysis.normalizeText(col("text"))
@@ -303,8 +303,8 @@ object CycleCapstoneQueries {
           .agg(count(lit(1)).cast("long").as("rc"))
         val rt = ref.groupBy("event_type")
           .agg(sum(col("rc")).cast("long").as("rn"))
-        val refAll = broadcast(ref.join(rt, "event_type")).cache()
-        val schema = s.read.parquet(stage).schema
+        val refAll = ref.join(rt, "event_type").cache()
+        val schema = graft.io.Footers.schema(s, stage)
         val src = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", 1).parquet(stage)
         val q = src.writeStream
@@ -317,7 +317,7 @@ object CycleCapstoneQueries {
             val pr = col("bc").cast("double") / col("bn")
             val qr = col("rc").cast("double") / col("rn")
             val psi = bb.join(bt, Seq("event_type", "grp"))
-              .join(refAll, Seq("event_type", "bucket"))
+              .join(broadcast(refAll), Seq("event_type", "bucket"))
               .where(col("bc") > 0 && col("rc") > 0)
               .select(col("grp"), col("event_type"), col("bn"),
                 round((pr - qr) * log(pr / qr), 9).cast("decimal(28,9)")

@@ -77,7 +77,7 @@ object IoQueries {
       (s, dir) => {
         val path = scratch(s, "zstd", dir)
         sample(s, dir).write.option("compression", "zstd").parquet(path)
-        s.read.parquet(path)
+        graft.io.Footers.read(s, path)
           .orderBy("l_orderkey", "l_linenumber")
       }),
 
@@ -147,8 +147,8 @@ object IoQueries {
             concat(lit("grp_"), col("l_returnflag")).as("label"))
           .distinct()
           .write.parquet(dimRoot)
-        val fact = s.read.parquet(factRoot)
-        val dim = s.read.parquet(dimRoot)
+        val fact = graft.io.Footers.read(s, factRoot)
+        val dim = graft.io.Footers.read(s, dimRoot)
           .where(col("label").isin("grp_A", "grp_R"))
         fact.join(dim, fact("l_returnflag") === dim("flag"))
           .groupBy(col("l_returnflag").as("flag"))

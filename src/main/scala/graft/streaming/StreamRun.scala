@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import graft.io.Footers
 
 /** Finite execution of a Structured-Streaming pipeline so streaming
   * operators can sit under the same DuckDB hash gate as batch queries:
@@ -27,7 +28,8 @@ object StreamRun {
   /** The events fixture as a STREAMING source, with the same
     * TIMESTAMP(NANOS) → µs normalization as [[graft.Tables.load]]
     * (streaming scans need an explicit schema, which is read from the
-    * parquet footer — a metadata-only operation).
+    * parquet footer on the driver by [[graft.io.Footers]] — metadata
+    * only, no Spark job).
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     // FileStreamSource requires a directory or a GLOB — a plain file path
@@ -44,7 +46,7 @@ object StreamRun {
                          globPath: String,
                          known: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = known.getOrElse(spark.read.parquet(schemaFrom).schema)
+    val schema = known.getOrElse(Footers.schema(spark, schemaFrom))
     graft.Tables.normalizeTs(spark.readStream.schema(schema).parquet(globPath))
   }
 
@@ -53,8 +55,7 @@ object StreamRun {
     * No timestamp normalization — use [[eventsStream]] for events.
     */
   def tableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val src = s"$dir/$name.parquet"
-    val schema = spark.read.parquet(src).schema
+    val schema = Footers.schema(spark, s"$dir/$name.parquet")
     spark.readStream.schema(schema)
       .parquet(s"$dir/[${name.head}]${name.tail}.parquet")
   }
@@ -80,7 +81,7 @@ object StreamRun {
   def eventsStreamFlushed(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$dir/events.parquet"
-    val schema = spark.read.parquet(src).schema
+    val schema = Footers.schema(spark, src)
     // md5 suffix disambiguates fixture paths the sanitizer would collide
     val tmp = s"$stageNs/${dir.replaceAll("[^A-Za-z0-9.]", "_")}-" +
       org.apache.commons.codec.digest.DigestUtils.md5Hex(dir).take(8)
@@ -117,13 +118,13 @@ object StreamRun {
     spark.catalog.dropTempView(name)
     // Stateful operators create one state-store instance per shuffle
     // partition PER micro-batch, and each pays a commit (checkpoint
-    // write) regardless of row count — at replay scale the per-partition
-    // overhead dominates the actual data. 8 partitions is plenty for the
-    // fixture volumes; production unbounded runs size this to the
-    // cluster instead. The conf is read at query START, so the
-    // set/restore brackets only this stream's lifetime.
+    // write) regardless of row count, so the partition count follows the
+    // input: see [[statePartitions]]. The conf is read at query START,
+    // so the set/restore brackets only this stream's lifetime.
+    val parts = statePartitions(inputBytes(stream),
+      spark.sparkContext.defaultParallelism)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try {
       val q = stream.writeStream
         .format("memory")
@@ -134,5 +135,41 @@ object StreamRun {
       q.awaitTermination()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     spark.table(name)
+  }
+
+  /** State partitions for a replay over `bytes` of input files: one per
+    * [[graft.ops.Frames.smallInputBytes]] (256 KB, the size below which
+    * `Frames.spread` keeps a file in one task), at least 1 and at most
+    * `cores`. A commit per partition per micro-batch costs the same on
+    * 1,000 rows as on 1,000,000, so a fixed count would spend most of a
+    * small replay committing empty state (1 partition at sf0.001 and
+    * sf0.01, 8 at sf0.1 on 32 cores); a large input still gets a
+    * partition per core.
+    */
+  private[graft] def statePartitions(bytes: Long, cores: Int): Int = {
+    val unit = graft.ops.Frames.smallInputBytes
+    math.max(1L, math.min(cores.toLong, (bytes + unit - 1) / unit)).toInt
+  }
+
+  /** Bytes of the visible files behind `stream`'s file-source leaves
+    * (each distinct `path` option, glob-expanded, directories walked).
+    */
+  private def inputBytes(stream: DataFrame): Long = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val conf = stream.sparkSession.sparkContext.hadoopConfiguration
+    val paths = stream.queryExecution.logical.collectLeaves().collect {
+      case r: StreamingRelation => r.dataSource.paths ++ r.dataSource.options.get("path")
+    }.flatten.distinct // a self-join reads its files once per side
+    paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(conf)
+      Option(fs.globStatus(path)).toSeq.flatten.map { st =>
+        val it = fs.listFiles(st.getPath, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(f => f.getPath.getName.startsWith(".") ||
+            f.getPath.getName.startsWith("_"))
+          .map(_.getLen).sum
+      }.sum
+    }.sum
   }
 }

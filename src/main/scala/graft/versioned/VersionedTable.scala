@@ -1116,7 +1116,7 @@ object VersionedTable {
       .filter(p => p.getName.endsWith(".parquet"))
       .map(_.getName)
     require(existing.nonEmpty, s"no parquet files directly under $root")
-    val schema = spark.read.parquet(root).schema
+    val schema = graft.io.Footers.schema(spark, root)
     t.commit(Manifest(0L, "CONVERT", schema, existing))
     t
   }

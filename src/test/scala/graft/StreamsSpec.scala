@@ -160,4 +160,12 @@ class StreamsSpec extends SparkSpec {
       graft.functions.Udfs.decadeViaUdf(col("year")).as("viaUdf"))
     both.where(col("native") =!= col("viaUdf")).count() shouldBe 0
   }
+
+  test("state partitions: one per 256 KB of input, at least 1, at most one per core") {
+    import graft.streaming.StreamRun.statePartitions
+    statePartitions(0L, 4) shouldBe 1
+    statePartitions(23L * 1024, 32) shouldBe 1
+    statePartitions(2L * 1024 * 1024, 4) shouldBe 4
+    statePartitions(2L * 1024 * 1024, 32) shouldBe 8
+  }
 }

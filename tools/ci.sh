@@ -14,6 +14,14 @@ fail=0
 # a mid-run edit voids the marker instead of laundering itself into it.
 tree_at_start=$(tools/ci_tree_hash.sh)
 
+echo "== every parquet read passes a schema (no inference job)"
+# a schema-less read runs a one-task Spark job per load to infer the
+# schema; src/main reads footers on the driver (graft.io.Footers) instead
+if grep -rn '\.read\.parquet(' src/main/scala; then
+  echo "FAIL: schema-less parquet read in src/main (use graft.io.Footers.read)"
+  fail=1
+fi
+
 echo "== compile + test"
 test_out=$(sbt -batch test 2>&1); test_rc=$?
 echo "$test_out" | grep -E "Tests:|\*\*\*|\[error\]" | head -5
