@@ -29,6 +29,16 @@ object Verify {
     // run of Verify at the same commit/SF can now be diffed hash-for-hash
     // without re-deriving anything through pandas.
     val rowHashes = scala.collection.mutable.LinkedHashMap[String, String]()
+    // a name-filtered run merges into the output dir's existing hashes:
+    // the other queries' entries stay, the re-run ones are replaced (or
+    // dropped, if the re-run fails)
+    val hashFile = Paths.get(s"$outDir/row_hashes.json")
+    for (prefix <- nameFilter if Files.exists(hashFile)) {
+      import scala.jdk.CollectionConverters._
+      val prior = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(hashFile.toFile, classOf[java.util.Map[String, String]])
+      rowHashes ++= prior.asScala.filterNot { case (k, _) => k.startsWith(prefix) }
+    }
     def canonicalHash(path: String): String = {
       import org.apache.spark.sql.functions.{to_json, struct, col}
       val df = graft.io.Footers.read(spark, path)
@@ -91,7 +101,7 @@ object Verify {
     // canonical hashes + engine-version stamp: makes a builder run and a
     // driver run directly comparable (which side diverged, and on what
     // engine version) instead of reconstructing via pandas
-    Files.writeString(Paths.get(s"$outDir/row_hashes.json"),
+    Files.writeString(hashFile,
       rowHashes.map { case (k, v) => s"${q(k)}: ${q(v)}" }
         .mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/env.json"),

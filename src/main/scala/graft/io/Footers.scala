@@ -19,23 +19,48 @@ import org.apache.spark.sql.types.StructType
   * `key=value` partition directories are descended into. Partition
   * columns are not in the footer: Spark appends them, with their
   * inferred types, exactly as it does after inference.
+  *
+  * [[read]] also returns a tiny input as ONE partition: when the data
+  * files it lists total less than [[graft.ops.Frames.smallInputBytes]]
+  * (256 KB), the scan is `coalesce(1)`. The plan then reports
+  * `SinglePartition`, which satisfies the distribution an aggregate,
+  * window or sort requires, and a sort-merge join of two such inputs, so
+  * none of them plans a shuffle exchange over it: the query runs as one
+  * stage instead of one stage job per exchange, each of which AQE would
+  * have coalesced back into a single partition anyway. Above the floor
+  * the scan is left as Spark splits it. An explicit repartition on top
+  * still wins (`CollapseRepartition` drops the coalesce), and filters
+  * push through the coalesce to the scan, so partition pruning is
+  * unchanged.
   */
 object Footers {
 
   /** The schema a schema-less read of `path` would infer, with no job. */
-  def schema(spark: SparkSession, path: String): StructType = {
+  def schema(spark: SparkSession, path: String): StructType =
+    schemaOf(spark, listing(spark, path))
+
+  /** A parquet scan of `path` with the footer schema: no inference job,
+    * and one partition when its data files total under 256 KB.
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val files = listing(spark, path)
+    val df = spark.read.schema(schemaOf(spark, files)).parquet(path)
+    val bytes = files.filterNot(f => summaries(f.getPath.getName)).map(_.getLen).sum
+    if (bytes < graft.ops.Frames.smallInputBytes) df.coalesce(1) else df
+  }
+
+  private def listing(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = leafFiles(fs, fs.getFileStatus(p)).sortBy(_.getPath.toString)
+    leafFiles(fs, fs.getFileStatus(p)).sortBy(_.getPath.toString)
+  }
+
+  private def schemaOf(spark: SparkSession, files: Seq[FileStatus]): StructType = {
     def named(n: String) = files.find(_.getPath.getName == n)
     val pick = named("_common_metadata").orElse(named("_metadata"))
       .orElse(files.find(f => !summaries(f.getPath.getName)))
     GraftParquetBridge.readSchema(spark, pick.toSeq)
   }
-
-  /** A parquet scan of `path` with the footer schema: no inference job. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(schema(spark, path)).parquet(path)
 
   /** Non-empty files under `st` that Spark's file index would list:
     * direct children, plus the files of `key=value` subdirectories.

@@ -53,4 +53,32 @@ object Lake {
     val p = new Path(path)
     fs(conf, p).exists(p)
   }
+
+  /** Per-JVM scratch namespace under `java.io.tmpdir`: unique, so
+    * concurrent processes sharing the tmpdir never clobber each other's
+    * scratch tables mid-run; stable within the JVM, so a repeated run
+    * rebuilds in place (rm-first) instead of leaking a copy per call.
+    * Deleted when the JVM exits.
+    */
+  private lazy val scratchNs: String = {
+    val ns = s"${sys.props("java.io.tmpdir")}/graft-scratch-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    sys.addShutdownHook { val _ = org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ns)) }
+    ns
+  }
+
+  /** The scratch root for `name` over fixture `dir` in this JVM's
+    * namespace. The md5 suffix keeps apart fixture paths that the
+    * sanitized name would collide.
+    */
+  def scratchRoot(name: String, dir: String): String =
+    s"$scratchNs/$name-${dir.replaceAll("[^A-Za-z0-9.]", "_")}-" +
+      org.apache.commons.codec.digest.DigestUtils.md5Hex(dir).take(8)
+
+  /** [[scratchRoot]], emptied. */
+  def scratch(spark: SparkSession, name: String, dir: String): String = {
+    val root = scratchRoot(name, dir)
+    rm(conf(spark), root)
+    root
+  }
 }

@@ -6,16 +6,17 @@ import org.apache.spark.storage.StorageLevel
 /** Shared DataFrame plumbing used across operator modules. */
 object Frames {
 
-  /** File inputs smaller than this stay in their scan partitions, and a
+  /** Parquet inputs smaller than this are read as one partition
+    * ([[graft.io.Footers.read]]) and stay there ([[spread]]), and a
     * streaming replay gets one state partition per this many input bytes
     * ([[graft.streaming.StreamRun.statePartitions]]).
     */
   val smallInputBytes: Long = 256L * 1024
 
   /** Round-robin the frame across all cores — but ONLY when it is
-    * under-partitioned. Small parquet files arrive as ONE scan partition
-    * (file < maxPartitionBytes), which would run CPU-heavy downstream
-    * stages single-threaded; one tiny shuffle parallelizes them. At
+    * under-partitioned. A parquet file below maxPartitionBytes arrives as
+    * ONE scan partition, which would run CPU-heavy downstream stages
+    * single-threaded; one shuffle parallelizes them. At
     * cluster scale the same input arrives as hundreds of splits, and
     * there this is a NO-OP: repartitioning a well-partitioned fact table
     * down to defaultParallelism would be a pure pessimization, so the
@@ -27,8 +28,9 @@ object Frames {
     * the old always-spread behavior (their stats are estimates or the
     * defaultSizeInBytes sentinel, and skipping on those could leave a
     * heavy stage single-threaded). The guard also skips TINY file
-    * inputs (combined bytes below [[smallInputBytes]], 256 KB): below
-    * ~8 KB of input per core there is not enough work per task to
+    * inputs (combined bytes below [[smallInputBytes]], 256 KB), which
+    * [[graft.io.Footers.read]] returns as a single partition on purpose:
+    * below ~8 KB of input per core there is not enough work per task to
     * amortize the exchange + task scheduling, and the repartition
     * measurably SLOWS the sf0.001-class replay (measured round 16:
     * +0.3..0.4 s per affected query). Reads only optimizer statistics —

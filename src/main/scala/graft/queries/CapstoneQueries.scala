@@ -279,7 +279,7 @@ object CapstoneQueries {
         import graft.versioned.VersionedTable
         val base = T(s, dir, "customer")
         val t0 = VersionedTable.create(s,
-          VersionedQueries.scratch(s, "capstone", dir), base)
+          graft.io.Lake.scratch(s, "capstone", dir), base)
         val t1 = t0.update(col("c_acctbal") < 0,
           Map("c_acctbal" -> lit(0.0)))
         val t2 = t1.delete(col("c_mktsegment") === "MACHINERY")

@@ -82,12 +82,8 @@ object CycleCapstoneQueries {
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
         import graft.versioned.VersionedTable
-        val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_vt/stream-cur-$safe"
-        val stage = s"${sys.props("java.io.tmpdir")}/graft-stage-cur-$safe"
-        val hconf = graft.io.Lake.conf(s)
-        graft.io.Lake.rm(hconf, root)
-        graft.io.Lake.rm(hconf, stage)
+        val root = graft.io.Lake.scratch(s, "stream-cur", dir)
+        val stage = graft.io.Lake.scratch(s, "stage-cur", dir)
         // replay the corpus as FOUR files → four micro-batches: the
         // stream must converge to the batch answer whatever the split
         // (the oracle is batching-invariant by construction)
@@ -197,7 +193,7 @@ object CycleCapstoneQueries {
         import graft.versioned.VersionedTable
         val orders = T(s, dir, "orders")
         val t0 = VersionedTable.create(s,
-          VersionedQueries.scratch(s, "cycle", dir),
+          graft.io.Lake.scratch(s, "cycle", dir),
           orders.where(col("o_orderkey") % 100 =!= 0))
         val t1 = t0.append(orders.where(col("o_orderkey") % 100 === 0))
         val t2 = t1.delete(col("o_orderkey") % 97 === 0)
@@ -281,12 +277,8 @@ object CycleCapstoneQueries {
       (s, dir) => {
         import org.apache.spark.sql.streaming.Trigger
         import graft.versioned.VersionedTable
-        val safe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val root = s"${sys.props("java.io.tmpdir")}/graft_vt/drift-$safe"
-        val stage = s"${sys.props("java.io.tmpdir")}/graft-stage-drift-$safe"
-        val hconf = graft.io.Lake.conf(s)
-        graft.io.Lake.rm(hconf, root)
-        graft.io.Lake.rm(hconf, stage)
+        val root = graft.io.Lake.scratch(s, "drift", dir)
+        val stage = graft.io.Lake.scratch(s, "stage-drift", dir)
         def bucketed(df: DataFrame): DataFrame = df
           .where(col("value").isNotNull)
           .select(col("event_type"),

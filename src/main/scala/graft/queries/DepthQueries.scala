@@ -446,7 +446,7 @@ object DepthQueries {
         import graft.versioned.VersionedTable
         val cols = Seq("l_orderkey", "l_linenumber", "l_partkey",
           "l_suppkey", "l_quantity")
-        val root = VersionedQueries.scratch(s, "zorder", dir)
+        val root = graft.io.Lake.scratch(s, "zorder", dir)
         val t = VersionedTable.create(s, root,
           T(s, dir, "lineitem").select(cols.map(col): _*))
         t.zorder(numFiles = 8, cols = Seq("l_partkey", "l_suppkey"))

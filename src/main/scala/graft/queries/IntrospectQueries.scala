@@ -64,7 +64,7 @@ object IntrospectQueries {
         SELECT doc_id, lang, source, n_chars FROM documents
         ORDER BY doc_id"""))(
       (s, dir) => {
-        val rawRoot = VersionedQueries.scratch(s, "ingest_raw", dir)
+        val rawRoot = graft.io.Lake.scratch(s, "ingest_raw", dir)
         val landed = graft.io.Ingest.stage(s,
           src = s"$dir/documents.parquet",
           rawRoot = rawRoot, dataset = "documents", date = "240101")

@@ -15,12 +15,6 @@ import graft.io.{Lake, Readers, Writers}
   */
 object IoQueries {
 
-  private def scratch(s: SparkSession, name: String, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_io/$name-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    Lake.rm(Lake.conf(s), root)
-    root
-  }
-
   private val oracle = """
       SELECT l_orderkey, l_linenumber, l_returnflag, l_linestatus
       FROM lineitem WHERE l_orderkey < 100
@@ -40,7 +34,7 @@ object IoQueries {
     // S1/S2: CSV sink + header/escape reader round-trip.
     Q("q48_csv_roundtrip", Q.sql(oracle))(
       (s, dir) => {
-        val path = scratch(s, "csv", dir)
+        val path = Lake.scratch(s, "csv", dir)
         // escape must match Readers.csvQuoted (escape='"'); Spark's default
         // write escape is backslash, which that reader would mis-parse on
         // quote-bearing fields
@@ -53,7 +47,7 @@ object IoQueries {
     // S3 (splittable variant): JSONL sink + reader round-trip.
     Q("q49_jsonl_roundtrip", Q.sql(oracle))(
       (s, dir) => {
-        val path = scratch(s, "jsonl", dir)
+        val path = Lake.scratch(s, "jsonl", dir)
         sample(s, dir).write.json(path)
         Readers.jsonLines(s, path, Some(schema))
           .orderBy("l_orderkey", "l_linenumber")
@@ -64,7 +58,7 @@ object IoQueries {
     // native orc reader/writer, oracled against the parquet source.
     Q("q201_orc_roundtrip", Q.sql(oracle))(
       (s, dir) => {
-        val path = scratch(s, "orc", dir)
+        val path = Lake.scratch(s, "orc", dir)
         sample(s, dir).write.orc(path)
         s.read.schema(schema).orc(path)
           .orderBy("l_orderkey", "l_linenumber")
@@ -75,7 +69,7 @@ object IoQueries {
     // default worth flipping); the read path is codec-transparent.
     Q("q202_zstd_roundtrip", Q.sql(oracle))(
       (s, dir) => {
-        val path = scratch(s, "zstd", dir)
+        val path = Lake.scratch(s, "zstd", dir)
         sample(s, dir).write.option("compression", "zstd").parquet(path)
         graft.io.Footers.read(s, path)
           .orderBy("l_orderkey", "l_linenumber")
@@ -139,10 +133,10 @@ object IoQueries {
         GROUP BY 1 ORDER BY 1"""))(
       (s, dir) => {
         val li = Tables.load(s, dir, "lineitem")
-        val factRoot = scratch(s, "dppfact", dir)
+        val factRoot = Lake.scratch(s, "dppfact", dir)
         li.select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
           .write.partitionBy("l_returnflag").parquet(factRoot)
-        val dimRoot = scratch(s, "dppdim", dir)
+        val dimRoot = Lake.scratch(s, "dppdim", dir)
         li.select(col("l_returnflag").as("flag"),
             concat(lit("grp_"), col("l_returnflag")).as("label"))
           .distinct()

@@ -191,7 +191,7 @@ object StreamingQueries {
       (s, dir) => {
         import graft.versioned.VersionedTable
         val viewSchema = Seq("user_id", "event_id", "event_type", "ts", "value")
-        val root = VersionedQueries.scratch(s, "cdcview", dir)
+        val root = graft.io.Lake.scratch(s, "cdcview", dir)
         // seed with an empty keyed table so every micro-batch is an upsert;
         // ONE stream construction serves both the schema probe and the run
         val stream = StreamRun.eventsStream(s, dir).select(viewSchema.map(col): _*)
@@ -311,9 +311,7 @@ object StreamingQueries {
         import org.apache.spark.sql.{Dataset, Row}
         import org.apache.spark.sql.streaming.Trigger
         import graft.versioned.VersionedTable
-        val root = s"${sys.props("java.io.tmpdir")}/graft_vt/stream-lake-" +
-          dir.replaceAll("[^A-Za-z0-9.]", "_")
-        graft.io.Lake.rm(graft.io.Lake.conf(s), root)
+        val root = graft.io.Lake.scratch(s, "stream-lake", dir)
         val src = StreamRun.eventsStream(s, dir)
           .select("event_id", "event_type", "value")
         val q = src.writeStream

@@ -18,7 +18,8 @@ import graft.versioned.VersionedTable
   *  - restore (V6): post-restore current == the base table
   *  - evolution (V8): widened rows reconstructed with a CASE'd extra column
   *
-  * Scratch tables live under java.io.tmpdir and are rebuilt per run.
+  * Scratch tables live in the JVM's scratch namespace
+  * ([[graft.io.Lake.scratch]]) and are rebuilt per run.
   */
 object VersionedQueries {
 
@@ -26,12 +27,6 @@ object VersionedQueries {
     Tables.load(s, dir, "nation")
 
   private val NationCols = Seq("n_nationkey", "n_name", "n_regionkey")
-
-  private[queries] def scratch(s: SparkSession, name: String, dir: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_vt/$name-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-    Lake.rm(Lake.conf(s), root)
-    root
-  }
 
   private def ordered(df: DataFrame): DataFrame =
     df.select(NationCols.map(col): _*).orderBy("n_nationkey")
@@ -48,7 +43,7 @@ object VersionedQueries {
           n_regionkey
         FROM nation ORDER BY n_nationkey"""))(
       (s, dir) => {
-        val t = VersionedTable.create(s, scratch(s, "update", dir), nation(s, dir))
+        val t = VersionedTable.create(s, Lake.scratch(s, "update", dir), nation(s, dir))
         t.update(col("n_regionkey") === 0, Map("n_name" -> lit("REDACTED")))
         ordered(t.toDF)
       }),
@@ -56,7 +51,7 @@ object VersionedQueries {
     // V5: time travel — asOf(0) after an update equals the base table.
     Q("q43_versioned_timetravel", Q.sql(baseOracle))(
       (s, dir) => {
-        val t = VersionedTable.create(s, scratch(s, "timetravel", dir), nation(s, dir))
+        val t = VersionedTable.create(s, Lake.scratch(s, "timetravel", dir), nation(s, dir))
         t.update(col("n_regionkey") === 0, Map("n_name" -> lit("REDACTED")))
         ordered(t.asOf(0))
       }),
@@ -64,7 +59,7 @@ object VersionedQueries {
     // V6: restore — current after update + restore(0) equals the base table.
     Q("q44_versioned_restore", Q.sql(baseOracle))(
       (s, dir) => {
-        val t = VersionedTable.create(s, scratch(s, "restore", dir), nation(s, dir))
+        val t = VersionedTable.create(s, Lake.scratch(s, "restore", dir), nation(s, dir))
         t.update(col("n_regionkey") === 0, Map("n_name" -> lit("REDACTED")))
         t.restore(0)
         ordered(t.toDF)
@@ -78,7 +73,7 @@ object VersionedQueries {
         FROM nation ORDER BY n_nationkey"""))(
       (s, dir) => {
         val base = nation(s, dir)
-        val t = VersionedTable.create(s, scratch(s, "evolve", dir),
+        val t = VersionedTable.create(s, Lake.scratch(s, "evolve", dir),
           base.where(col("n_regionkey") < 3))
         val widened = base.where(col("n_regionkey") >= 3)
           .withColumn("extrakey", (col("n_nationkey") * 2).cast("long"))
@@ -100,7 +95,7 @@ object VersionedQueries {
         FROM nation WHERE n_regionkey = 0
         ORDER BY _change_type, n_nationkey"""))(
       (s, dir) => {
-        val t = VersionedTable.create(s, scratch(s, "changes", dir), nation(s, dir))
+        val t = VersionedTable.create(s, Lake.scratch(s, "changes", dir), nation(s, dir))
         t.update(col("n_regionkey") === 0, Map("n_name" -> lit("REDACTED")))
         t.changes(0, 1)
           .select((NationCols :+ "_change_type").map(col): _*)
@@ -117,7 +112,7 @@ object VersionedQueries {
         WHERE o_orderkey BETWEEN 1000 AND 2000
         ORDER BY o_orderkey"""))(
       (s, dir) => {
-        val t = VersionedTable.create(s, scratch(s, "prune", dir),
+        val t = VersionedTable.create(s, Lake.scratch(s, "prune", dir),
           Tables.load(s, dir, "orders")
             .select("o_orderkey", "o_custkey", "o_totalprice"))
         t.compact(numFiles = 8, clusterBy = Seq("o_orderkey"))
@@ -143,7 +138,7 @@ object VersionedQueries {
       (s, dir) => {
         import s.implicits._
         val base = nation(s, dir)
-        val t = VersionedTable.create(s, scratch(s, "merge", dir), base)
+        val t = VersionedTable.create(s, Lake.scratch(s, "merge", dir), base)
         val source = base.where(col("n_regionkey") === 0)
           .select(col("n_nationkey"),
             concat(lit("MERGED_"), col("n_name")).as("n_name"),
@@ -172,7 +167,7 @@ object VersionedQueries {
         GROUP BY 1 ORDER BY 1"""))(
       (s, dir) => {
         val orders = Tables.load(s, dir, "orders")
-        val t = VersionedTable.create(s, scratch(s, "rf", dir),
+        val t = VersionedTable.create(s, Lake.scratch(s, "rf", dir),
           orders.where(col("o_orderkey") % 100 =!= 0))
         t.append(orders.where(col("o_orderkey") % 100 === 0)) // RF1
         t.delete(col("o_orderkey") % 97 === 0)                // RF2

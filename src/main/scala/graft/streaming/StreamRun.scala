@@ -69,26 +69,13 @@ object StreamRun {
     * sink. This is the standard end-of-stream flush marker pattern for
     * replaying a finite log through append-mode event-time state.
     */
-  /** Per-JVM staging namespace: unique so CONCURRENT processes sharing
-    * java.io.tmpdir never clobber each other's staged files mid-stream,
-    * stable within the JVM so repeated runs re-stage in place (rm-first)
-    * instead of leaking a fixture copy per invocation.
-    */
-  private lazy val stageNs =
-    s"${sys.props("java.io.tmpdir")}/graft-stream-flush-" +
-      java.util.UUID.randomUUID().toString.take(8)
-
   def eventsStreamFlushed(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$dir/events.parquet"
     val schema = Footers.schema(spark, src)
-    // md5 suffix disambiguates fixture paths the sanitizer would collide
-    val tmp = s"$stageNs/${dir.replaceAll("[^A-Za-z0-9.]", "_")}-" +
-      org.apache.commons.codec.digest.DigestUtils.md5Hex(dir).take(8)
+    val tmp = graft.io.Lake.scratch(spark, "stream-flush", dir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val tfs = tmpPath.getFileSystem(conf)
-    tfs.delete(tmpPath, true)
+    val tfs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
     org.apache.hadoop.fs.FileUtil.copy(
       new org.apache.hadoop.fs.Path(src).getFileSystem(conf), new org.apache.hadoop.fs.Path(src),
       tfs, new org.apache.hadoop.fs.Path(tmp, "events.parquet"),

@@ -10,6 +10,11 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -88,6 +93,57 @@ class FootersSpec extends SparkSpec {
     viaFooter.schema shouldBe spark.read.parquet(root).schema
     viaFooter.except(spark.read.parquet(root)).count() shouldBe 0L
     graft.io.Readers.parquetPartition(spark, root, "k", 1).count() shouldBe 10L
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Shuffle exchanges in the plan `df` ran with (AQE's final plan,
+    * query stages included).
+    */
+  private def exchangesRun(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    val _ = df.collect()
+    Plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+  }
+
+  test("a tiny read runs a groupBy, a window and an orderBy with no shuffle exchange") {
+    val path = s"$fixtures/sf0.001/orders.parquet"
+    def query(df: org.apache.spark.sql.DataFrame) = df
+      .groupBy("o_custkey").agg(count(lit(1)).as("n"), sum("o_totalprice").as("total"))
+      .withColumn("rk", rank().over(Window.orderBy(col("total").desc)))
+      .orderBy("o_custkey")
+    val viaFooter = query(Footers.read(spark, path))
+    exchangesRun(viaFooter) shouldBe empty
+    val plain = query(spark.read.parquet(path))
+    // negative control: the same query over a plain read does shuffle
+    exchangesRun(plain) should not be empty
+    viaFooter.collect().toSeq shouldBe plain.collect().toSeq
+  }
+
+  test("a directory of 8 tiny files reads as 1 partition") {
+    val dir = tmpDir("footers-eight") + "/t"
+    spark.range(0, 800, 1, 8).write.parquet(dir)
+    spark.read.parquet(dir).rdd.getNumPartitions should be > 1
+    Footers.read(spark, dir).rdd.getNumPartitions shouldBe 1
+    Footers.read(spark, dir).count() shouldBe 800L
+  }
+
+  test("sf0.1 lineitem, above the 256 KB floor, is read without a Repartition") {
+    val df = Footers.read(spark, s"$fixtures/sf0.1/lineitem.parquet")
+    df.queryExecution.optimizedPlan.collect { case r: Repartition => r } shouldBe empty
+    // negative control: a tiny table does get one
+    Footers.read(spark, s"$fixtures/sf0.001/lineitem.parquet")
+      .queryExecution.optimizedPlan.collect { case r: Repartition => r }.size shouldBe 1
+  }
+
+  test("a small partitioned root still prunes partitions through the coalesce") {
+    val root = tmpDir("footers-prune") + "/p"
+    spark.range(0, 30).select(col("id"), (col("id") % 3).as("k"))
+      .write.partitionBy("k").parquet(root)
+    val df = graft.io.Readers.parquetPartition(spark, root, "k", 1)
+    val scans = Plans.collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+    scans should not be empty
+    scans.foreach(_.partitionFilters.map(_.sql).mkString should include ("k"))
+    df.count() shouldBe 10L
   }
 
   test("a TIMESTAMP(NANOS) ts reads as a long under nanosAsLong and normalizes the same") {

@@ -145,8 +145,7 @@ class StreamsSpec extends SparkSpec {
     val out = SparkEntry.queries("q468_stream_curation_capstone")(spark, dir)
       .collect()
     assert(out.nonEmpty, "q468 produced no split rows")
-    val root = s"${sys.props("java.io.tmpdir")}/graft_vt/stream-cur-" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")
+    val root = graft.io.Lake.scratchRoot("stream-cur", dir)
     val versions = VersionedTable.open(spark, root).history.count()
     assert(versions >= 2,
       s"expected >=2 commits (create + upserts), saw $versions — " +

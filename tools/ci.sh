@@ -22,6 +22,11 @@ if grep -rn '\.read\.parquet(' src/main/scala; then
   fail=1
 fi
 
+echo "== benchmark harness tests (negative controls)"
+pb_out=$(python3 -m unittest perfbench/test_perfbench.py 2>&1); pb_rc=$?
+echo "$pb_out" | tail -3
+[ $pb_rc -ne 0 ] && { echo "FAIL: perfbench tests (rc=$pb_rc)"; fail=1; }
+
 echo "== compile + test"
 test_out=$(sbt -batch test 2>&1); test_rc=$?
 echo "$test_out" | grep -E "Tests:|\*\*\*|\[error\]" | head -5
