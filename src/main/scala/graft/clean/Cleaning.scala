@@ -3,6 +3,8 @@ package graft.clean
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Frames
+
 /** Row- and schema-level cleaning operators (reference §2.2 P1/P2, §2.3
   * C1–C3).
   *
@@ -52,18 +54,15 @@ object Cleaning {
     * frame plus (stage, rowsAfter) counts — the programmatic form of the
     * reference's printed count audits.
     *
-    * Note: each count is an action, one job per stage; at 100 TB you run
-    * this on samples.
+    * Cost: one pass. The chain runs once through
+    * [[graft.ops.Frames.materializeCounted]], which reads every count off
+    * the job that materializes the cleaned frame; that frame is held in
+    * executor storage until it is dropped, so the caller's write reads it
+    * back instead of re-reading the raw input.
     */
   def runAudited(df: DataFrame, stages: Seq[Stage]): (DataFrame, Seq[(String, Long)]) = {
-    var cur = df
-    val counts = Seq.newBuilder[(String, Long)]
-    counts += ("input" -> cur.count())
-    stages.foreach { s =>
-      cur = s.op(cur)
-      counts += (s.name -> cur.count())
-    }
-    (cur, counts.result())
+    val (out, counts) = Frames.materializeCounted(df, stages.map(_.op): _*)
+    (out, ("input" +: stages.map(_.name)).zip(counts))
   }
 
   /** P4-style validity predicate: fixed-length code column. */

@@ -26,7 +26,7 @@ import graft.text.TextAnalysis
   */
 object Dedup {
 
-  import graft.ops.Frames.{cached, materialize, spread}
+  import graft.ops.Frames.{cached, materialize, materializeCounted, spread}
 
   /** Exact dedup groups: one row per distinct content fingerprint with the
     * surviving (minimum) id and the duplicate count.
@@ -500,8 +500,9 @@ object Dedup {
     * "Connected Components in MapReduce and Beyond", SoCC'14). No
     * driver-side graph state; [[graft.ops.Frames.materialize]] truncates
     * lineage between rounds so round N's plan does not replay rounds
-    * 1..N-1 (set `graft.checkpoint.reliable=true` for fault-tolerant
-    * barriers at cluster scale).
+    * 1..N-1, and the contracted edge list is counted by the job that
+    * materializes it ([[graft.ops.Frames.materializeCounted]]), so the
+    * convergence test costs no job of its own.
     *
     * Throws `IllegalStateException` if edges remain after `maxIters`
     * rounds — an unconverged labeling must never masquerade as a valid
@@ -529,8 +530,8 @@ object Dedup {
     // (every node of the graph is a `src` in the mirrored list).
     var mapping: DataFrame = null
     var it = 0
-    var done = false
-    while (!done && it < maxIters) {
+    var remaining = -1L
+    while (remaining != 0 && it < maxIters) {
       // (1) Every current representative takes min(self, neighbours).
       // Checkpointed: several joins consume it, and without this each one
       // would re-run the aggregation over the full edge list.
@@ -546,12 +547,14 @@ object Dedup {
       // (2) Contract: relabel endpoints, keep only cross-label edges —
       // dense near-dup clusters collapse here in the first round, so the
       // 2|pairs| edge list shrinks to almost nothing immediately.
-      edges = materialize(edges
+      val (contracted, Seq(n)) = materializeCounted(edges
         .join(lab.select(col("node").as("src"), col("lab").as("slab")), "src")
         .join(lab.select(col("node").as("dst"), col("lab").as("dlab")), "dst")
         .where(col("slab") =!= col("dlab"))
         .select(col("slab").as("src"), col("dlab").as("dst"))
         .distinct())
+      edges = contracted
+      remaining = n
       // (3) Compose the cumulative mapping with this round's labels;
       // representatives untouched this round (no edges left) keep theirs.
       // Deliberately LAZY: each round's lab is a shallow join of
@@ -564,13 +567,12 @@ object Dedup {
         else mapping
           .join(lab.select(col("node").as("rep"), col("lab")), Seq("rep"), "left")
           .select(col("id"), coalesce(col("lab"), col("rep")).as("rep"))
-      done = edges.isEmpty
       it += 1
     }
-    if (!done)
+    if (remaining != 0)
       throw new IllegalStateException(
         s"components did not converge after $maxIters rounds " +
-          s"(${edges.count()} cross-label edges remain); the labeling is " +
+          s"($remaining cross-label edges remain); the labeling is " +
           "incomplete — raise maxIters only if the merge-chain depth " +
           s"genuinely exceeds 2^$maxIters")
     mapping.select(col("id"), col("rep").as("component"))

@@ -45,7 +45,7 @@ object PageRank {
     */
   def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
       broadcastRanks: Boolean = true): DataFrame = {
-    import graft.ops.Frames.materialize
+    import graft.ops.Frames.{materialize, materializeCounted}
     // Materialize the edge list ONCE: the caller's edge derivation is
     // typically a distinct over the fact table, and without this barrier
     // every iteration's join (plus deg below) would re-execute it — the
@@ -54,14 +54,13 @@ object PageRank {
     val e = materialize(edges)
     // (node, deg) is consumed by every iteration — pin it. Its key set is
     // exactly the node set (no-dangling contract), so the rank vector
-    // seeds from it and the node count is one driver scalar off it.
+    // seeds from it and the node count is counted by the same job.
     // The (node, scalar) frames are model-sized — coalesce before each
     // barrier so per-round cost isn't 32 near-empty tasks + 32 block
     // writes per checkpoint (local replay; at cluster scale size to the
     // rank vector, not the default shuffle width).
-    val deg = materialize(
+    val (deg, Seq(n)) = materializeCounted(
       e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
-    val n = deg.count()
     val base = (1.0 - damping) / n
     def bc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
     var rank = deg.select(col("src").as("node"), lit(1.0 / n).as("pr"))
@@ -112,12 +111,12 @@ object PageRank {
     */
   def runPersonalized(edges: DataFrame, iters: Int, seeds: DataFrame,
       damping: Double = 0.85, broadcastRanks: Boolean = true): DataFrame = {
-    import graft.ops.Frames.materialize
+    import graft.ops.Frames.{materialize, materializeCounted}
     val e = materialize(edges)
     val deg = materialize(
       e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
-    val sd = materialize(seeds.select(col("node")).distinct().coalesce(4))
-    val nSeeds = sd.count()
+    val (sd, Seq(nSeeds)) =
+      materializeCounted(seeds.select(col("node")).distinct().coalesce(4))
     require(nSeeds > 0, "runPersonalized needs a non-empty seed set")
     val baseSeed = (1.0 - damping) / nSeeds
     def bc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df

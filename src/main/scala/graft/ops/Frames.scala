@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 /** Shared DataFrame plumbing used across operator modules. */
@@ -60,20 +61,36 @@ object Frames {
     * iterative operators ([[graft.dedup.Dedup.components]],
     * [[graft.ops.Prefix.runningTotal]]) place between rounds/branches.
     *
-    * Default is `localCheckpoint(eager = true)`: executor-local blocks,
-    * no checkpoint directory needed — right for the local harness and for
+    * `localCheckpoint(eager = true)`: executor-local blocks, no
+    * checkpoint directory needed — right for the local harness and for
     * short-lived intermediates. At cluster scale that trades away fault
     * tolerance (an executor loss after the checkpoint fails the job
     * because the blocks have no lineage to recompute from) and pins
-    * executor storage until the session drops the RDD. Set the session
-    * conf `graft.checkpoint.reliable=true` (plus
-    * `sparkContext.setCheckpointDir` on durable storage) to route these
-    * barriers through reliable `checkpoint(true)` instead — survivable
-    * and storage-bounded, at the cost of a distributed-FS round trip per
-    * barrier.
+    * executor storage until the session drops the RDD.
     */
-  def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.checkpoint.reliable", "false").toBoolean)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** [[materialize]] `steps` applied one after another to `df`, and
+    * count the rows of `df` and of each step's output in the same job:
+    * each count is a `count(lit(1))` [[Observation]] (a `CollectMetrics`
+    * node, `Dataset.observe`) that the checkpoint job computes as a side
+    * effect, so counting adds no job and no re-read of the input.
+    * Returns the materialized frame (a `LogicalRDD`, so no observation
+    * leaks into the caller's plan) and `steps.size + 1` counts, input
+    * first.
+    *
+    * A counter that never fired reads 0: no task runs over a
+    * zero-partition input, and the optimizer drops a counter beneath a
+    * step it proves empty (a constant-false filter, `limit(0)`).
+    */
+  def materializeCounted(df: DataFrame, steps: (DataFrame => DataFrame)*)
+      : (DataFrame, Seq[Long]) = {
+    val observations = Seq.fill(steps.size + 1)(Observation())
+    def counted(d: DataFrame, o: Observation) = d.observe(o, count(lit(1)).as("n"))
+    val last = steps.zip(observations.tail).foldLeft(counted(df, observations.head)) {
+      case (d, (step, o)) => counted(step(d), o)
+    }
+    val out = materialize(last)
+    (out, observations.map(_.get.getOrElse("n", 0L).asInstanceOf[Long]))
+  }
 }

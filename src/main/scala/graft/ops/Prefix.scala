@@ -63,8 +63,8 @@ object Prefix {
     // reusable exchange), making spark_partition_id disagree between the
     // rows branch and the offsets branch — silently wrong totals. The
     // barrier pins one boundary sample (and one upstream computation);
-    // see Frames.materialize for the local-vs-reliable checkpoint gate
-    // (`graft.checkpoint.reliable`) at cluster scale.
+    // see Frames.materialize for what its local checkpoint trades away
+    // at cluster scale.
     val withLocal = {
       val ranged = df.repartitionByRange(p, orderCols: _*)
         .withColumn("__pid", spark_partition_id())

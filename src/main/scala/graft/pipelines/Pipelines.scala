@@ -25,8 +25,10 @@ import graft.versioned.VersionedTable
   *    repair, evolving append.
   *
   * All stages are lazy DataFrame transforms until the final write, except
-  * [[curate]]'s audit, which runs one count job per stage
-  * ([[graft.clean.Cleaning.runAudited]]).
+  * [[curate]], which runs its cleaning chain once to materialize the
+  * curated frame and reads every per-stage count off that one pass
+  * ([[graft.clean.Cleaning.runAudited]]); the frame stays in executor
+  * storage until it is dropped, and the write reads it from there.
   */
 object Pipelines {
 

@@ -189,6 +189,24 @@ class DedupSpec extends SparkSpec {
     comp.keySet shouldBe (1L to 12L).toSet
   }
 
+  test("components: a pair-free input returns no rows and no exception") {
+    val schema = "id_a BIGINT, id_b BIGINT"
+    val noRows = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val noPartitions = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    for (pairs <- Seq(noRows, noPartitions))
+      Dedup.components(pairs).collect() shouldBe empty
+  }
+
+  test("components: an unconverged run reports the cross-label edges left") {
+    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](Dedup.components(pairs, maxIters = 1))
+    val left = """\((\d+) cross-label edges remain\)""".r
+      .findFirstMatchIn(e.getMessage).map(_.group(1).toLong)
+    left.exists(_ > 0) shouldBe true
+  }
+
   test("noveltyScores: exact copies score 0, unique text scores 1") {
     val nov = Dedup.noveltyScores(docs, $"doc_id", $"text", n = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap

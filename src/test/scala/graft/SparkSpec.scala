@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -25,4 +30,32 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The start events of the Spark jobs `body` runs: a marker job after it
+    * drains the (asynchronous, FIFO) listener bus up to the end of `body`.
+    */
+  def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val marker = "spec-drain"
+    def description(e: SparkListenerJobStart) = Option(e.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+    val seen = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val _ = seen.add(e)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try { val _ = sc.parallelize(Seq(1), 1).count() }
+      finally sc.setJobDescription(null)
+      def drained = seen.asScala.exists(description(_).contains(marker))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(drained, "listener bus did not drain")
+      seen.asScala.toSeq.filterNot(description(_).contains(marker))
+    } finally sc.removeSparkListener(listener)
+  }
 }

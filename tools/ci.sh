@@ -88,6 +88,18 @@ print('total', round(d['value'], 1), 'sec,', len(d['queries']), 'queries,', len(
 # headroom for sbt's trailing '[success] ...' line
 sys.exit(1 if (bad or len(line) > 1800) else 0)" || { echo "FAIL: bench contract"; fail=1; }
 
+echo "== medallion end to end (curate audits vs injected counts)"
+# the only run that checks Pipelines.curate's per-stage counts against the
+# counts the raw-file generator injected (plus the serve and versioned
+# steps that read the curated output back); no unit test does that
+med=$(python3 perfbench/run.py --workload medallion --seed 1 --seconds 30 --trace 0 2>/dev/null); med_rc=$?
+echo "$med" | tail -1 | python3 -c "
+import json, sys
+d = json.loads(sys.stdin.read().strip())
+print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'])
+sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $med_rc -eq 0 ] \
+  || { echo "FAIL: medallion (rc=$med_rc)"; fail=1; }
+
 echo "== ci green marker"
 # On a fully-green run, record a hash of the exact src/ + build tree that
 # was validated. The pre-commit hook refuses src/-touching commits whose
