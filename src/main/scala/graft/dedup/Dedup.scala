@@ -1,7 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.text.TextAnalysis
@@ -486,9 +492,25 @@ object Dedup {
     * the minimum id reachable — the cluster representative a dedup
     * pipeline keeps. Pair generators ([[minhashNearDups]],
     * [[simhashNearDups]], [[jaccardPairs]]) emit edges; this turns them
-    * into groups.
+    * into groups. Ids are non-null in every caller (document ids, part
+    * names filtered `isNotNull`); a null id is rejected on the driver
+    * path and has no defined component on the distributed one.
     *
-    * Algorithm: min-label contraction with pointer jumping. Each round
+    * Path selection: the mirrored edge list (both directions of every
+    * pair) is materialized first, and the job that builds it also counts
+    * it ([[graft.ops.Frames.materializeCounted]]). When that count times
+    * Spark's own per-row size estimate for the edge schema
+    * (`EstimationUtils.getSizePerRow`) is at most
+    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark already
+    * ships whole to every executor — the edges are collected and
+    * clustered on the driver ([[componentsOnDriver]]): two jobs (build
+    * and collect) instead of about two dozen round jobs and checkpoints,
+    * for the small graphs near-dup generators emit (SCALE.md). A threshold of -1 turns the driver
+    * path off, as it turns off broadcast joins.
+    *
+    * Distributed path (any larger graph; the only path that handles a
+    * graph too big for the driver, and the reference the tests compare
+    * against): min-label contraction with pointer jumping. Each round
     * (1) relabels every node to the min of itself and its neighbours,
     * (2) CONTRACTS the edge list to the distinct cross-label edges —
     * near-dup clusters are dense, so after round one the 2|pairs|-row
@@ -501,15 +523,16 @@ object Dedup {
     * driver-side graph state; [[graft.ops.Frames.materialize]] truncates
     * lineage between rounds so round N's plan does not replay rounds
     * 1..N-1, and the contracted edge list is counted by the job that
-    * materializes it ([[graft.ops.Frames.materializeCounted]]), so the
-    * convergence test costs no job of its own.
+    * materializes it, so the convergence test costs no job of its own.
+    *
+    * Both paths return the same columns, types and rows.
     *
     * Throws `IllegalStateException` if edges remain after `maxIters`
-    * rounds — an unconverged labeling must never masquerade as a valid
-    * clustering. Pointer jumping converges in O(log n) rounds, so the
-    * default 25 covers any graph this side of 2^25 chained merges; a
-    * throw means the input is adversarial, not that more rounds are a
-    * fix.
+    * rounds of the distributed path — an unconverged labeling must never
+    * masquerade as a valid clustering. Pointer jumping converges in
+    * O(log n) rounds, so the default 25 covers any graph this side of
+    * 2^25 chained merges; a throw means the input is adversarial, not
+    * that more rounds are a fix.
     */
   def components(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     require(maxIters > 0, s"maxIters must be positive, got $maxIters")
@@ -521,11 +544,63 @@ object Dedup {
     // dwarfs everything below. Generators emit unique id_a < id_b pairs,
     // so the mirrored list needs no dedup; later rounds dedup their own
     // contracted output.
-    var edges = materialize(pairs
+    val (mirrored, Seq(nEdges)) = materializeCounted(pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    val threshold = mirrored.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = EstimationUtils.getSizePerRow(mirrored.queryExecution.analyzed.output) * nEdges
+    if (bytes <= threshold) componentsOnDriver(mirrored)
+    else componentsDistributed(mirrored, maxIters)
+  }
+
+  /** [[components]] on the driver: union-find over the collected edge
+    * list, each set rooted at its minimum id under Spark's ordering for
+    * the id type (UTF-8 binary order for strings, as `min` uses — not
+    * `String.compareTo`, which orders UTF-16 code units). Union keeps the
+    * smaller root, so a root is always its set's minimum and the labels
+    * do not depend on edge order. Returns a local relation.
+    */
+  private def componentsOnDriver(edges: DataFrame): DataFrame = {
+    val idField = edges.schema("src")
+    val idType = idField.dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    // keyed by Catalyst values (UTF8String compares and hashes by bytes)
+    val parent = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var node = x
+      var up = parent(node)
+      while (up != node) { // path halving
+        val grand = parent(up)
+        parent(node) = grand
+        node = grand
+        up = parent(node)
+      }
+      node
+    }
+    def register(v: Any): Any = {
+      require(v != null, "components: null id in the pair graph")
+      val id = toCatalyst(v)
+      if (!parent.contains(id)) parent(id) = id
+      id
+    }
+    edges.collect().foreach { r =>
+      val (a, b) = (find(register(r.get(0))), find(register(r.get(1))))
+      if (a != b) { if (ord.lt(a, b)) parent(b) = a else parent(a) = b }
+    }
+    val rows = parent.keys.toSeq.map(id => Row(toScala(id), toScala(find(id))))
+    edges.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      idField.copy(name = "id"), idField.copy(name = "component"))))
+  }
+
+  /** [[components]] as round-based min-label contraction over the
+    * materialized mirrored edge list.
+    */
+  private def componentsDistributed(mirrored: DataFrame, maxIters: Int): DataFrame = {
+    var edges = mirrored
     // Cumulative node -> representative mapping; round 0's labels seed it
     // (every node of the graph is a `src` in the mirrored list).
     var mapping: DataFrame = null

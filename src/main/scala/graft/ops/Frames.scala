@@ -79,9 +79,12 @@ object Frames {
     * leaks into the caller's plan) and `steps.size + 1` counts, input
     * first.
     *
-    * A counter that never fired reads 0: no task runs over a
-    * zero-partition input, and the optimizer drops a counter beneath a
-    * step it proves empty (a constant-false filter, `limit(0)`).
+    * The optimizer drops a counter beneath a step it proves empty (a
+    * constant-false filter or `limit(0)` folds the subtree, counter and
+    * all, into an empty `LocalRelation`), so that observation never fires.
+    * Such a stage is counted on its own with `count()` over the unobserved
+    * frame; a chain whose counters all fired (the usual case, and also a
+    * zero-partition input, whose counters fire with 0) runs one job.
     */
   def materializeCounted(df: DataFrame, steps: (DataFrame => DataFrame)*)
       : (DataFrame, Seq[Long]) = {
@@ -91,6 +94,10 @@ object Frames {
       case (d, (step, o)) => counted(step(d), o)
     }
     val out = materialize(last)
-    (out, observations.map(_.get.getOrElse("n", 0L).asInstanceOf[Long]))
+    lazy val frames = steps.scanLeft(df)((d, step) => step(d))
+    val counts = observations.zipWithIndex.map { case (o, i) =>
+      o.get.get("n").fold(frames(i).count())(_.asInstanceOf[Long])
+    }
+    (out, counts)
   }
 }

@@ -90,6 +90,17 @@ class CleaningSpec extends SparkSpec {
     countEachStage(inputs(2)._2).map(_._2) shouldBe Seq(8L, 8L, 6L, 4L, 2L)
   }
 
+  test("runAudited counts the stages beneath a step the optimizer proves empty") {
+    // a constant-false filter folds the chain below it, counters and all,
+    // into an empty LocalRelation, so those counters never fire
+    val df = spark.range(10).toDF("k")
+    val (out, counts) = Cleaning.runAudited(df, Seq(
+      Cleaning.Stage("dedup", Cleaning.dedup),
+      Cleaning.Stage("never", d => d.where(org.apache.spark.sql.functions.lit(false)))))
+    counts shouldBe Seq("input" -> 10L, "dedup" -> 10L, "never" -> 0L)
+    out.count() shouldBe 0
+  }
+
   test("runAudited runs one job and leaves no observation in the returned plan") {
     val df = frame(Seq(Row("ABC", 1), Row("ABC", 1), Row("AC", 2), Row(null, null)), 2)
     var audited: (DataFrame, Seq[(String, Long)]) = null

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -172,21 +174,84 @@ class DedupSpec extends SparkSpec {
     est.values.foreach(e => e should (be >= 0.0 and be <= 1.0))
   }
 
+  /** `Dedup.components` runs on the driver when the mirrored edge list is
+    * broadcast-sized (every graph here is, at the session's threshold) and
+    * as distributed rounds when `spark.sql.autoBroadcastJoinThreshold` is
+    * -1, which is set only around the call. Checks that the named path ran:
+    * only the driver path returns a local relation.
+    */
+  private def onPath(path: String)(call: => DataFrame): DataFrame = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val comp = path match {
+      case "driver" => call
+      case "distributed" =>
+        val saved = spark.conf.getOption(key)
+        spark.conf.set(key, "-1")
+        try call finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val local = comp.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    withClue(s"$path path ran: ") { local shouldBe (path == "driver") }
+    comp
+  }
+
+  private val paths = Seq("driver", "distributed")
+
+  private def longComponents(comp: DataFrame): Map[Long, Long] =
+    comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("components: min-label propagation finds connected clusters") {
     // Chain 1-2-3 plus island 5-6: transitive closure must label 3 with 1
     // even though (1,3) is not an edge; 4 appears in no pair -> no row.
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
-    val comp = Dedup.components(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    comp shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    for (path <- paths) withClue(path) {
+      longComponents(onPath(path)(Dedup.components(pairs))) shouldBe
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L)
+    }
   }
 
   test("components: long chain converges past one propagation round") {
     val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.components(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    comp.values.toSet shouldBe Set(1L)
-    comp.keySet shouldBe (1L to 12L).toSet
+    for (path <- paths) withClue(path) {
+      val comp = longComponents(onPath(path)(Dedup.components(pairs)))
+      comp.values.toSet shouldBe Set(1L)
+      comp.keySet shouldBe (1L to 12L).toSet
+    }
+  }
+
+  test("components: both paths return the same schema and rows") {
+    // random edges over 60 nodes: several components, endpoints in either
+    // order, repeated and mirrored pairs
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(40)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
+      .filter { case (a, b) => a != b }.toDF("id_a", "id_b")
+    val Seq(driver, distributed) = paths.map(p => onPath(p)(Dedup.components(pairs)))
+    driver.schema shouldBe distributed.schema
+    driver.collect().map(_.toString).sorted shouldBe
+      distributed.collect().map(_.toString).sorted
+  }
+
+  test("components: string ids take the UTF-8 minimum, as Spark's min does") {
+    // U+FF61 is EF BD A1 in UTF-8 and FF61 in UTF-16; U+1F600 is F0 9F 98 80
+    // in UTF-8 and D83D DE00 in UTF-16: the two orders disagree
+    "｡".compareTo("😀") should be > 0
+    val pairs = Seq(("😀", "｡")).toDF("id_a", "id_b")
+    pairs.select(least($"id_a", $"id_b")).head().getString(0) shouldBe "｡"
+    for (path <- paths) withClue(path) {
+      val comp = onPath(path)(Dedup.components(pairs))
+      comp.schema shouldBe pairs.select($"id_a".as("id"), $"id_a".as("component")).schema
+      comp.collect().map(r => r.getString(0) -> r.getString(1)).toMap shouldBe
+        Map("😀" -> "｡", "｡" -> "｡")
+    }
+  }
+
+  test("components: a broadcast-sized graph runs on the driver in at most 2 jobs") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val jobs = paths.map(p => p -> jobsDuring {
+      val _ = onPath(p)(Dedup.components(pairs)).collect()
+    }.size).toMap
+    jobs("driver") should be <= 2
+    // negative control: the round barriers of the distributed path
+    jobs("distributed") should be > jobs("driver")
   }
 
   test("components: a pair-free input returns no rows and no exception") {
@@ -195,13 +260,16 @@ class DedupSpec extends SparkSpec {
     val noPartitions = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(schema))
-    for (pairs <- Seq(noRows, noPartitions))
-      Dedup.components(pairs).collect() shouldBe empty
+    for (pairs <- Seq(noRows, noPartitions); path <- paths) withClue(path) {
+      onPath(path)(Dedup.components(pairs)).collect() shouldBe empty
+    }
   }
 
   test("components: an unconverged run reports the cross-label edges left") {
+    // only the distributed path runs in rounds
     val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val e = intercept[IllegalStateException](Dedup.components(pairs, maxIters = 1))
+    val e = intercept[IllegalStateException](
+      onPath("distributed")(Dedup.components(pairs, maxIters = 1)))
     val left = """\((\d+) cross-label edges remain\)""".r
       .findFirstMatchIn(e.getMessage).map(_.group(1).toLong)
     left.exists(_ > 0) shouldBe true

@@ -100,6 +100,18 @@ print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'
 sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $med_rc -eq 0 ] \
   || { echo "FAIL: medallion (rc=$med_rc)"; fail=1; }
 
+echo "== query_floor end to end (queries on row-permuted inputs)"
+# the only run that checks q147's entity clusters (Dedup.components) on a
+# row-permuted input against its DuckDB oracle: union-find labels that
+# depended on edge order would fail here, not on the fixed-order fixtures
+qf=$(python3 perfbench/run.py --workload query_floor --seed 1 --seconds 30 --trace 0 2>/dev/null); qf_rc=$?
+echo "$qf" | tail -1 | python3 -c "
+import json, sys
+d = json.loads(sys.stdin.read().strip())
+print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'])
+sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $qf_rc -eq 0 ] \
+  || { echo "FAIL: query_floor (rc=$qf_rc)"; fail=1; }
+
 echo "== ci green marker"
 # On a fully-green run, record a hash of the exact src/ + build tree that
 # was validated. The pre-commit hook refuses src/-touching commits whose
