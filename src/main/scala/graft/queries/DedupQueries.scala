@@ -228,13 +228,12 @@ object DedupQueries {
     // exactly in the oracle); chunks whose (signature, length) recurs
     // in ANOTHER doc are cross-doc duplicates — sub-document dedup at
     // the granularity storage dedup uses. Plan: documents are
-    // hash-partitioned by doc_id BEFORE the gram explode, so the
-    // generator runs on every core and the per-doc window and per-chunk
-    // aggregate reuse that partitioning (the one shuffle carries
-    // documents, not grams); the cross-doc test is a window over
-    // (sig, clen) on the chunk rows, not a self-join, so the
-    // explode→window→aggregate subtree runs once. Every later shuffle
-    // carries chunk rows. No all-pairs anywhere.
+    // hash-partitioned by doc_id so the chunker runs on every core; it
+    // emits chunk rows straight from per-doc hash arrays
+    // ([[graft.text.Chunking.contentDefined]]: no per-position rows, no
+    // sort); the cross-doc test is a window over (sig, clen) on the
+    // chunk rows, not a self-join, so the chunker runs once. Every later
+    // shuffle carries chunk rows. No all-pairs anywhere.
     Q("q307_cdc_chunking", Q.sql(s"""
         WITH d AS (
           SELECT doc_id, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS norm
@@ -269,34 +268,15 @@ object DedupQueries {
         // repartition of a small file back into one task
         val d = T(s, dir, "documents")
           .repartition(s.sessionState.conf.numShufflePartitions, col("doc_id"))
-          .select(col("doc_id"), TextAnalysis.normalizeText(col("text")).as("norm"))
-        // per-position 8-char window hashes; docs under 8 chars emit no
-        // grams (sequence(1,0) would step BACKWARD in Spark — emit an
-        // explicit empty array, the q295 guard)
-        val g = d.select(col("doc_id"),
-            posexplode(transform(
-              when(length(col("norm")) >= 8,
-                sequence(lit(1), length(col("norm")) - 7))
-                .otherwise(array().cast("array<int>")),
-              i => col("norm").substr(i, lit(8)))).as(Seq("pos0", "gram")))
-          .select(col("doc_id"), (col("pos0") + 1).as("pos"),
-            graft.functions.Hashing.hash48(col("gram")).as("h"))
-        val w = Window.partitionBy("doc_id").orderBy("pos")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val ch = g
-          .withColumn("chunk", lit(1) + coalesce(
-            sum(when(col("h") % 64 === 0, 1).otherwise(0)).over(w), lit(0)))
-          .groupBy("doc_id", "chunk")
-          .agg(count(lit(1)).as("clen"),
-            (sum(col("h")).cast("decimal(38,0)") % lit(1L << 48))
-              .cast("long").as("sig"))
+        val ch = graft.text.Chunking.contentDefined(d, col("doc_id"),
+          TextAnalysis.normalizeText(col("text")))
         // a (sig, clen) shared by two doc_ids is a cross-doc duplicate:
         // min != max over its window is count(DISTINCT doc_id) > 1; the
         // null-sig filter keeps the oracle's inner-join semantics
         val bySig = Window.partitionBy("sig", "clen")
         ch.where(col("sig").isNotNull)
-          .withColumn("dup", min(col("doc_id")).over(bySig) =!= max(col("doc_id")).over(bySig))
-          .groupBy("doc_id")
+          .withColumn("dup", min(col("id")).over(bySig) =!= max(col("id")).over(bySig))
+          .groupBy(col("id").as("doc_id"))
           .agg(count(lit(1)).as("n_chunks"),
             sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup_chunks"),
             round(sum(col("clen")).cast("double") / count(lit(1)), 6)

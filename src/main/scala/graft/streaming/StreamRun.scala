@@ -26,7 +26,8 @@ import graft.io.Footers
 object StreamRun {
 
   /** The events fixture as a STREAMING source, with the same
-    * TIMESTAMP(NANOS) → µs normalization as [[graft.Tables.load]]
+    * session pins and TIMESTAMP(NANOS) → µs normalization as
+    * [[graft.Tables.load]]
     * (streaming scans need an explicit schema, which is read from the
     * parquet footer on the driver by [[graft.io.Footers]] — metadata
     * only, no Spark job).
@@ -39,22 +40,24 @@ object StreamRun {
   }
 
   /** readStream over `globPath` with the schema of `schemaFrom` (or the
-    * one already in hand) and the TIMESTAMP(NANOS) → µs normalization
-    * shared by every events stream.
+    * one already in hand), the session pins and the TIMESTAMP(NANOS) → µs
+    * normalization shared by every events stream.
     */
   private def streamFrom(spark: SparkSession, schemaFrom: String,
                          globPath: String,
                          known: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.pinSemantics(spark)
     val schema = known.getOrElse(Footers.schema(spark, schemaFrom))
     graft.Tables.normalizeTs(spark.readStream.schema(schema).parquet(globPath))
   }
 
-  /** Any fixture table as a STREAMING source (schema from the parquet
-    * footer, bracket glob so FileStreamSource accepts the single file).
+  /** Any fixture table as a STREAMING source (session pins as
+    * [[graft.Tables.load]], schema from the parquet footer, bracket glob
+    * so FileStreamSource accepts the single file).
     * No timestamp normalization — use [[eventsStream]] for events.
     */
   def tableStream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.Tables.pinSemantics(spark)
     val schema = Footers.schema(spark, s"$dir/$name.parquet")
     spark.readStream.schema(schema)
       .parquet(s"$dir/[${name.head}]${name.tail}.parquet")
@@ -70,7 +73,7 @@ object StreamRun {
     * replaying a finite log through append-mode event-time state.
     */
   def eventsStreamFlushed(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.pinSemantics(spark)
     val src = s"$dir/events.parquet"
     val schema = Footers.schema(spark, src)
     val tmp = graft.io.Lake.scratch(spark, "stream-flush", dir)

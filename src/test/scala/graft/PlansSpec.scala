@@ -240,8 +240,8 @@ class PlansSpec extends SparkSpec {
     }
   }
 
-  test("q307 chunks in one pass: one documents scan, no join, no exchange between explode and window") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+  test("q307 chunks in one pass: one scan, no join, no position sort or ordered window") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -265,12 +265,10 @@ class PlansSpec extends SparkSpec {
       gen.size shouldBe 1
       // the generator runs on documents hash-partitioned by doc_id ...
       gen.head.collect { case e: ShuffleExchangeExec => e }.size shouldBe 1
-      // ... and the per-doc (ORDER BY pos) window reuses that partitioning
-      val perDoc = plan.collect { case w: WindowExec if w.orderSpec.nonEmpty => w }
-      perDoc.size shouldBe 1
-      perDoc.head.collect {
-        case e: ShuffleExchangeExec if e.exists(_.isInstanceOf[GenerateExec]) => e
-      } shouldBe empty
+      // ... and emits chunk rows from per-doc arrays: no per-position
+      // rows numbered by a sort and a running window
+      gen.head.collect { case s: SortExec => s } shouldBe empty
+      plan.collect { case w: WindowExec if w.orderSpec.nonEmpty => w } shouldBe empty
     }
     // the (sig, clen) window marks chunks shared across doc_ids: the two
     // identical documents have every chunk duplicated, the others none

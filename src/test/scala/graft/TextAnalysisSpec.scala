@@ -78,4 +78,101 @@ class TextAnalysisSpec extends SparkSpec {
     out("g1") shouldBe ((3L, 4L, 2L, 1L, 3.5))
     out("g2") shouldBe ((2L, 2L, 2L, 0L, 2.0 + 2.0 * 1 / 2))
   }
+
+  test("Tables.load and the stream readers pin JDK case mapping") {
+    val icu = "spark.sql.icu.caseMappings.enabled"
+    val dir = tmpDir("pins")
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    try {
+      spark.conf.set(icu, "true")
+      Tables.load(spark, dir, "documents")
+      spark.conf.get(icu) shouldBe "false"
+      spark.conf.set(icu, "true")
+      graft.streaming.StreamRun.tableStream(spark, dir, "documents")
+      spark.conf.get(icu) shouldBe "false"
+    } finally Tables.pinSemantics(spark)
+  }
+
+  test("normalizeText maps case the same through the JDK and ICU up to Unicode 13") {
+    val icu = "spark.sql.icu.caseMappings.enabled"
+    // Latin-1 accent, sharp s (no single-char uppercase), Greek with a
+    // final sigma, dotted capital I (lowercases to i + U+0307), the
+    // titlecase digraph, Cherokee and a ligature
+    val sample = Seq("Café  ÉTÉ", "Straße", "ΟΔΟΣ ΟΔΟΣ", "İstanbul", "ǅemal",
+      "ᏣᎳᎩ", "ﬁne", "plain ascii")
+    // U+10570 (Vithkuqi capital A, Unicode 14) is past the JDK 17 tables:
+    // ICU lowercases it to U+10597, the JDK leaves it as is
+    val vithkuqi = new String(Character.toChars(0x10570))
+    def run(icuOn: Boolean, texts: Seq[String]): Seq[String] = {
+      spark.conf.set(icu, icuOn.toString)
+      texts.toDF("t").select(TextAnalysis.normalizeText($"t")).as[String].collect().toSeq
+    }
+    try {
+      run(icuOn = false, sample) shouldBe run(icuOn = true, sample)
+      run(icuOn = false, Seq(vithkuqi)) shouldBe Seq(vithkuqi)
+      run(icuOn = true, Seq(vithkuqi)) shouldBe Seq(new String(Character.toChars(0x10597)))
+    } finally Tables.pinSemantics(spark)
+  }
+
+  /** The per-position formulation of [[graft.text.Chunking.contentDefined]]
+    * it replaced: one row per 8-char window, chunks numbered by a running
+    * count of the boundaries before each position, then aggregated.
+    */
+  private def cdcReference(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{length => chars, _}
+    val g = df.select($"id",
+        posexplode(transform(
+          when(chars($"t") >= 8, sequence(lit(1), chars($"t") - 7))
+            .otherwise(array().cast("array<int>")),
+          i => $"t".substr(i, lit(8)))).as(Seq("pos0", "gram")))
+      .select($"id", ($"pos0" + 1).as("pos"),
+        graft.functions.Hashing.hash48($"gram").as("h"))
+    val w = Window.partitionBy("id").orderBy("pos")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    g.withColumn("chunk", lit(1) + coalesce(
+        sum(when($"h" % 64 === 0, 1).otherwise(0)).over(w), lit(0)))
+      .groupBy("id", "chunk")
+      .agg(count(lit(1)).as("clen"),
+        (sum($"h").cast("decimal(38,0)") % lit(1L << 48)).cast("long").as("sig"))
+  }
+
+  test("Chunking.contentDefined equals the per-position windowed reference") {
+    import org.apache.spark.sql.functions.col
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val h = (g: String) => graft.functions.Md5Long.hashUtf8(
+      org.apache.spark.unsafe.types.UTF8String.fromString(g), 0, 6)
+    val cut = (g: String) => h(g) % 64 == 0
+    val rnd = new scala.util.Random(307)
+    def word(n: Int) = Seq.fill(n)(("abcdefgh ")(rnd.nextInt(9))).mkString
+    // 8-char windows that end a chunk, and a 9-char text whose two windows
+    // both do (consecutive boundaries)
+    val cutGram = Iterator.continually(word(8)).find(cut).get
+    val twoCuts = Iterator.continually(word(9))
+      .find(w => cut(w.take(8)) && cut(w.drop(1))).get
+    val repeated = (0x21 to 0x24f).map(c => c.toChar.toString * 8)
+    val cutRun = repeated.find(cut).get * 3          // every window cuts
+    val flatRun = repeated.find(g => !cut(g)).get * 3 // no window cuts
+    val random = (0 until 40).map(i => Gen.listOfN(i * 13, Gen.oneOf("ab cd efgh".toSeq))
+      .map(_.mkString).pureApply(Gen.Parameters.default, Seed(i.toLong)))
+    val texts: Seq[Option[String]] = Seq(None, Some(""), Some("short"),
+      Some("seven c"), Some("exactly8"), Some(cutGram), Some(twoCuts),
+      Some(word(100) + cutGram), Some(word(50) + twoCuts + word(50)),
+      Some(cutRun), Some(flatRun)) ++ random.map(Some(_))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("id"), col("chunk").cast("long"), col("clen").cast("long"), col("sig"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val got = rows(graft.text.Chunking.contentDefined(df, col("id"), col("t")))
+    got shouldBe rows(cdcReference(df))
+    // the hand-built cases are exercised: a cut at the last window closes
+    // one chunk, not two; consecutive cuts make a one-window chunk; null,
+    // empty and sub-8-char texts emit nothing
+    got.filter(_._1 == 5L) shouldBe Set((5L, 1L, 1L, h(cutGram)))
+    got.filter(_._1 == 6L).map(_._3) shouldBe Set(1L)
+    got.filter(_._1 == 9L).size shouldBe 17
+    got.filter(_._1 == 10L).size shouldBe 1
+    got.map(_._1) should contain noneOf (0L, 1L, 2L, 3L)
+  }
 }

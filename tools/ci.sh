@@ -1,6 +1,7 @@
 #!/bin/bash
-# One-command round validation: compile, unit tests, smoke, sf0.01
-# oracle gate, sf0.001 bench contract. Exits non-zero on any failure
+# One-command round validation: compile, unit tests, smoke, sf0.01 and
+# sf0.001 oracle gates (the latter also with broadcast joins off), sf0.001
+# bench contract, three end-to-end benchmark runs. Exits non-zero on any failure
 # (exit codes are captured explicitly — a `cmd | grep` pipeline would
 # swallow the real status).
 set -u
@@ -54,6 +55,18 @@ oracle001_out=$(python3 tools/check_oracle.py /root/testdata/sf0.001 "$out001" 2
 echo "$oracle001_out" | tail -1
 [ $oracle001_rc -ne 0 ] && { echo "FAIL: oracle gate sf0.001 (rc=$oracle001_rc)"; echo "$oracle001_out" | grep ^FAIL | head -5; fail=1; }
 
+echo "== correctness vs DuckDB oracle at sf0.001, broadcast joins off"
+# the large side of Spark's broadcast switch: every join sort-merges and
+# Dedup.components takes its distributed path, which the small fixtures
+# otherwise never reach (a Spark conf read from the JVM's system
+# properties, not a graft setting)
+outnb=$(mktemp -d)
+GRAFT_JAVA_OPTS=-Dspark.sql.autoBroadcastJoinThreshold=-1 \
+  tools/run.sh graft.Verify /root/testdata/sf0.001 "$outnb" 2>/dev/null >/dev/null
+oraclenb_out=$(python3 tools/check_oracle.py /root/testdata/sf0.001 "$outnb" 2>&1); oraclenb_rc=$?
+echo "$oraclenb_out" | tail -1
+[ $oraclenb_rc -ne 0 ] && { echo "FAIL: oracle gate sf0.001 broadcast off (rc=$oraclenb_rc)"; echo "$oraclenb_out" | grep ^FAIL | head -5; fail=1; }
+
 echo "== oracle coverage (every query must ship an oracle unless allowlisted)"
 # rows-only allowlist: queries whose semantics cannot be expressed in
 # DuckDB SQL. Adding a query without an oracle and without listing it
@@ -88,29 +101,36 @@ print('total', round(d['value'], 1), 'sec,', len(d['queries']), 'queries,', len(
 # headroom for sbt's trailing '[success] ...' line
 sys.exit(1 if (bad or len(line) > 1800) else 0)" || { echo "FAIL: bench contract"; fail=1; }
 
+# run one perfbench workload at seed 1; it must exit 0 and end
+# "correct": true with "failed": 0
+e2e_correct() { # $1 = workload
+  local out rc
+  out=$(python3 perfbench/run.py --workload "$1" --seed 1 --seconds 30 --trace 0 2>/dev/null); rc=$?
+  echo "$out" | tail -1 | python3 -c "
+import json, sys
+d = json.loads(sys.stdin.read().strip())
+print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'])
+sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $rc -eq 0 ] \
+    || { echo "FAIL: $1 (rc=$rc)"; fail=1; }
+}
+
 echo "== medallion end to end (curate audits vs injected counts)"
 # the only run that checks Pipelines.curate's per-stage counts against the
 # counts the raw-file generator injected (plus the serve and versioned
 # steps that read the curated output back); no unit test does that
-med=$(python3 perfbench/run.py --workload medallion --seed 1 --seconds 30 --trace 0 2>/dev/null); med_rc=$?
-echo "$med" | tail -1 | python3 -c "
-import json, sys
-d = json.loads(sys.stdin.read().strip())
-print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'])
-sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $med_rc -eq 0 ] \
-  || { echo "FAIL: medallion (rc=$med_rc)"; fail=1; }
+e2e_correct medallion
 
 echo "== query_floor end to end (queries on row-permuted inputs)"
 # the only run that checks q147's entity clusters (Dedup.components) on a
 # row-permuted input against its DuckDB oracle: union-find labels that
 # depended on edge order would fail here, not on the fixed-order fixtures
-qf=$(python3 perfbench/run.py --workload query_floor --seed 1 --seconds 30 --trace 0 2>/dev/null); qf_rc=$?
-echo "$qf" | tail -1 | python3 -c "
-import json, sys
-d = json.loads(sys.stdin.read().strip())
-print('correct', d['correct'], 'attempted', d['attempted'], 'failed', d['failed'])
-sys.exit(0 if d['correct'] is True and d['failed'] == 0 else 1)" && [ $qf_rc -eq 0 ] \
-  || { echo "FAIL: query_floor (rc=$qf_rc)"; fail=1; }
+e2e_correct query_floor
+
+echo "== rows_heavy end to end (q307 on a row-permuted 8-replica input)"
+# the only run that checks q307's content-defined chunks end to end on a
+# row-permuted, replicated input (texts repeat verbatim across replicas,
+# so every chunk recurs under other doc_ids)
+e2e_correct rows_heavy
 
 echo "== ci green marker"
 # On a fully-green run, record a hash of the exact src/ + build tree that

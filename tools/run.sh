@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars without
 # sbt startup overhead. Usage: tools/run.sh graft.Verify <args...>
+# GRAFT_JAVA_OPTS adds JVM options, e.g. a Spark conf as a system property:
+#   GRAFT_JAVA_OPTS=-Dspark.sql.autoBroadcastJoinThreshold=-1 tools/run.sh ...
 set -e
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls -d /opt/spark/jars)/*"
@@ -12,6 +14,6 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
+exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} ${GRAFT_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"
