@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -32,7 +31,7 @@ import graft.text.TextAnalysis
   */
 object Dedup {
 
-  import graft.ops.Frames.{cached, materialize, materializeCounted, spread}
+  import graft.ops.Frames.{cached, driverSized, materialize, materializeCounted, spread}
 
   /** Exact dedup groups: one row per distinct content fingerprint with the
     * surviving (minimum) id and the duplicate count.
@@ -498,15 +497,12 @@ object Dedup {
     *
     * Path selection: the mirrored edge list (both directions of every
     * pair) is materialized first, and the job that builds it also counts
-    * it ([[graft.ops.Frames.materializeCounted]]). When that count times
-    * Spark's own per-row size estimate for the edge schema
-    * (`EstimationUtils.getSizePerRow`) is at most
-    * `spark.sql.autoBroadcastJoinThreshold` — the size Spark already
-    * ships whole to every executor — the edges are collected and
-    * clustered on the driver ([[componentsOnDriver]]): two jobs (build
-    * and collect) instead of about two dozen round jobs and checkpoints,
-    * for the small graphs near-dup generators emit (SCALE.md). A threshold of -1 turns the driver
-    * path off, as it turns off broadcast joins.
+    * it ([[graft.ops.Frames.materializeCounted]]). When that count passes
+    * the graph kernels' size rule ([[graft.ops.Frames.driverSized]]), the
+    * edges are collected and clustered on the driver
+    * ([[componentsOnDriver]]): two jobs (build and collect) instead of
+    * about two dozen round jobs and checkpoints, for the small graphs
+    * near-dup generators emit (SCALE.md).
     *
     * Distributed path (any larger graph; the only path that handles a
     * graph too big for the driver, and the reference the tests compare
@@ -549,9 +545,7 @@ object Dedup {
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val threshold = mirrored.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val bytes = EstimationUtils.getSizePerRow(mirrored.queryExecution.analyzed.output) * nEdges
-    if (bytes <= threshold) componentsOnDriver(mirrored)
+    if (driverSized(mirrored, nEdges)) componentsOnDriver(mirrored)
     else componentsDistributed(mirrored, maxIters)
   }
 

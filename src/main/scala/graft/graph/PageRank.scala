@@ -1,8 +1,14 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.ops.Frames.{driverSized, materialize, materializeCounted}
 import graft.ops.Relational.dsum
 
 /** Fixed-iteration PageRank over an edge list — the graph-centrality
@@ -19,13 +25,19 @@ import graft.ops.Relational.dsum
   *    equi-join on src, then a hash aggregation on dst;
   *  - ranks/degrees are (node, scalar) frames — tiny relative to edges;
   *    the edge frame is re-read per iteration (cache it at cluster scale);
-  *  - no driver-side state beyond the node count (one scalar).
+  *  - a broadcast-sized edge list skips all of that: it is collected and
+  *    iterated on the driver (the size rule of
+  *    [[graft.ops.Frames.driverSized]], shared with
+  *    [[graft.dedup.Dedup.components]]), which holds the edges, the
+  *    degrees and one rank vector; larger graphs keep no driver-side state
+  *    beyond the node count (one scalar).
   *
   * Determinism: per-edge contributions are computed as doubles (IEEE-fixed
   * expression shape), then summed decimal-routed ([[dsum]]) so the
   * aggregation is order-independent; the damping update is a fixed
   * double expression. The whole recurrence replays in DuckDB CTEs
-  * bit-for-bit.
+  * bit-for-bit, and the driver path replays the distributed one the same
+  * way (see [[Collected]]).
   */
 object PageRank {
 
@@ -42,16 +54,39 @@ object PageRank {
     * For web-scale graphs whose node set exceeds executor memory, pass
     * false: the joins fall back to shuffle equi-joins co-partitioned on
     * src and the iteration costs two shuffles instead of one.
+    *
+    * Path selection: the edge list is materialized and counted in one job;
+    * when it passes [[graft.ops.Frames.driverSized]] (and `iters > 0`) it
+    * is collected and the rounds run on the driver, returning a local
+    * relation with the same schema and rows as the distributed rounds
+    * below, which run otherwise (and then `broadcastRanks` applies).
     */
   def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
       broadcastRanks: Boolean = true): DataFrame = {
-    import graft.ops.Frames.{materialize, materializeCounted}
     // Materialize the edge list ONCE: the caller's edge derivation is
     // typically a distinct over the fact table, and without this barrier
     // every iteration's join (plus deg below) would re-execute it — the
     // final rank plan re-derives edges once per nesting level, turning
     // k iterations into O(k) full fact-table scans.
-    val e = materialize(edges)
+    val (e, Seq(nEdges)) = materializeCounted(edges)
+    if (iters > 0 && Collected.fits(e, nEdges)) runOnDriver(new Collected(e), iters, damping)
+    else runDistributed(e, iters, damping, broadcastRanks)
+  }
+
+  /** [[run]]'s rounds on the driver. The node count includes a null-src
+    * degree group, as the distributed `groupBy("src")` does.
+    */
+  private def runOnDriver(g: Collected, iters: Int, damping: Double): DataFrame = {
+    val n = g.deg.size + (if (g.nullSrc) 1 else 0)
+    val base = (1.0 - damping) / n
+    var rank: Seq[(Any, Double)] = g.deg.keys.map(_ -> 1.0 / n).toSeq
+    for (_ <- 1 to iters)
+      rank = g.walk(rank).map { case (node, w) => node -> (base + damping * w) }
+    g.frame(rank, g.nodeField)
+  }
+
+  private def runDistributed(e: DataFrame, iters: Int, damping: Double,
+      broadcastRanks: Boolean): DataFrame = {
     // (node, deg) is consumed by every iteration — pin it. Its key set is
     // exactly the node set (no-dangling contract), so the rank vector
     // seeds from it and the node count is counted by the same job.
@@ -111,13 +146,45 @@ object PageRank {
     */
   def runPersonalized(edges: DataFrame, iters: Int, seeds: DataFrame,
       damping: Double = 0.85, broadcastRanks: Boolean = true): DataFrame = {
-    import graft.ops.Frames.{materialize, materializeCounted}
-    val e = materialize(edges)
-    val deg = materialize(
-      e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
+    val (e, Seq(nEdges)) = materializeCounted(edges)
     val (sd, Seq(nSeeds)) =
       materializeCounted(seeds.select(col("node")).distinct().coalesce(4))
     require(nSeeds > 0, "runPersonalized needs a non-empty seed set")
+    // the driver path of run(), when the seed set fits as well
+    if (iters > 0 && Collected.fits(e, nEdges) && driverSized(sd, nSeeds) &&
+        sd.schema("node").dataType == e.schema("dst").dataType)
+      personalizedOnDriver(new Collected(e), sd, iters, damping)
+    else personalizedDistributed(e, sd, nSeeds, iters, damping, broadcastRanks)
+  }
+
+  /** [[runPersonalized]]'s rounds on the driver: the same `seeded ∪
+    * seedOnly` assembly and expression order. A null seed never matches
+    * a walked node, so it stays in `seedOnly` (the left-anti join keeps
+    * it) and can sit beside a walked null `dst`.
+    */
+  private def personalizedOnDriver(g: Collected, sd: DataFrame, iters: Int,
+      damping: Double): DataFrame = {
+    val seeds = sd.collect().map(r => g.key(r.get(0))).toSeq
+    val seedSet = seeds.toSet
+    val baseSeed = (1.0 - damping) / seeds.size
+    var rank: Seq[(Any, Double)] = seeds.map(_ -> 1.0 / seeds.size)
+    for (_ <- 1 to iters) {
+      val walk = g.walk(rank)
+      val seeded = walk.map { case (node, w) =>
+        node -> ((if (node != null && seedSet(node)) baseSeed else 0.0) + damping * w)
+      }
+      val walked = walk.map(_._1).toSet
+      val seedOnly = seeds.filterNot(s => s != null && walked(s)).map(_ -> baseSeed)
+      rank = seeded ++ seedOnly
+    }
+    g.frame(rank, g.nodeField.copy(
+      nullable = g.nodeField.nullable || sd.schema("node").nullable))
+  }
+
+  private def personalizedDistributed(e: DataFrame, sd: DataFrame, nSeeds: Long,
+      iters: Int, damping: Double, broadcastRanks: Boolean): DataFrame = {
+    val deg = materialize(
+      e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
     val baseSeed = (1.0 - damping) / nSeeds
     def bc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
     var rank = sd.select(col("node"), lit(1.0 / nSeeds).as("pr"))
@@ -146,6 +213,86 @@ object PageRank {
       rank = if (it < iters) materialize(next.coalesce(4)) else next
     }
     rank
+  }
+
+  /** A materialized edge list collected for the driver path. Nodes are
+    * keyed by Catalyst value (a `UTF8String` equals and hashes by its
+    * bytes, as Spark's join and grouping keys do), which holds for the
+    * integral, string, date and timestamp node types [[Collected.fits]]
+    * admits.
+    *
+    * Bit-for-bit with the distributed rounds: [[walk]] computes each
+    * contribution as Spark's `round(pr / deg, 12)` does
+    * (`BigDecimal.valueOf(x).setScale(12, HALF_UP)`), casts it with
+    * Spark's own [[Decimal]] to DECIMAL(27,12), sums the decimals
+    * exactly, and reads the sum back with Spark's decimal-to-double cast,
+    * so the result does not depend on edge order. Join semantics carry
+    * over too: a null `src` never matches a rank row and so never
+    * contributes, a null `dst` collects into its own group, and a `dst`
+    * that is never a `src` is ranked but sends nothing.
+    */
+  private final class Collected(e: DataFrame) {
+    val nodeField: StructField = e.schema("dst").copy(name = "node")
+    private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(nodeField.dataType)
+    private val toScala = CatalystTypeConverters.createToScalaConverter(nodeField.dataType)
+    def key(v: Any): Any = toCatalyst(v)
+    private val edges: Array[(Any, Any)] =
+      e.select("src", "dst").collect().map(r => (key(r.get(0)), key(r.get(1))))
+    /** out-degree of every non-null `src` */
+    val deg: mutable.LinkedHashMap[Any, Long] = mutable.LinkedHashMap.empty
+    val nullSrc: Boolean = edges.exists(_._1 == null)
+    edges.foreach { case (src, _) =>
+      if (src != null) deg(src) = deg.getOrElse(src, 0L) + 1L }
+
+    /** One round's walk: per `dst`, the decimal sum of the contributions
+      * `round(pr / deg, 12)` of its ranked sources, as a double.
+      */
+    def walk(rank: Seq[(Any, Double)]): Seq[(Any, Double)] = {
+      val c = mutable.HashMap.empty[Any, java.math.BigDecimal]
+      rank.foreach { case (node, pr) =>
+        deg.get(node).foreach { d =>
+          val x = java.math.BigDecimal.valueOf(pr / d)
+            .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue
+          val dec = Decimal(x)
+          require(dec.changePrecision(27, 12), s"contribution $x overflows DECIMAL(27,12)")
+          c(node) = dec.toJavaBigDecimal
+        }
+      }
+      val sums = mutable.LinkedHashMap.empty[Any, java.math.BigDecimal]
+      edges.foreach { case (src, dst) =>
+        c.get(src).foreach(x => sums(dst) = sums.get(dst).fold(x)(_.add(x)))
+      }
+      sums.toSeq.map { case (node, sum) => node -> Decimal(sum).toDouble }
+    }
+
+    /** (node, pr) rows as a local relation; `pr` is nullable, as the
+      * distributed aggregate's is. One partition, as a tiny parquet input
+      * is read ([[graft.ops.Frames.smallInputBytes]]): the rows are
+      * broadcast-sized, and a caller's sort or aggregate over a single
+      * partition plans no exchange (a range sort would otherwise run a
+      * sampling job and a shuffle over the driver's own rows).
+      */
+    def frame(rank: Seq[(Any, Double)], node: StructField): DataFrame =
+      e.sparkSession.createDataFrame(
+        rank.map { case (k, pr) => Row(toScala(k), pr) }.asJava,
+        StructType(Seq(node, StructField("pr", DoubleType, nullable = true))))
+        .coalesce(1)
+  }
+
+  private object Collected {
+    /** [[driverSized]] edges whose endpoints share one node type with
+      * value equality on its Catalyst form; anything else (floating-point
+      * or binary ids, mixed endpoint types) takes the distributed rounds.
+      */
+    def fits(e: DataFrame, nEdges: Long): Boolean = {
+      val (src, dst) = (e.schema("src").dataType, e.schema("dst").dataType)
+      val keyed = dst match {
+        case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType => true
+        case s: StringType => s == StringType
+        case _ => false
+      }
+      keyed && src == dst && driverSized(e, nEdges)
+    }
   }
 
   /** DuckDB oracle for [[runPersonalized]]: unrolled CTEs over

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
@@ -69,6 +70,26 @@ object Frames {
     * executor storage until the session drops the RDD.
     */
   def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** The size rule of the iterative graph kernels
+    * ([[graft.dedup.Dedup.components]], [[graft.graph.PageRank.run]],
+    * [[graft.graph.PageRank.runPersonalized]]): a materialized frame of
+    * `rows` rows is collected and processed on the driver when `rows` ×
+    * Spark's own per-row size estimate for its schema
+    * (`EstimationUtils.getSizePerRow`: 8 B of row overhead plus each
+    * column's default size, so 24 B for a (long, long) edge) is at most
+    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark already ships
+    * whole to every executor. So a driver path collects at most
+    * threshold ÷ per-row estimate rows (about 437k long edges at the
+    * default 10 MB); the estimate is Spark's row size, not that of the
+    * collected JVM objects, which are larger. A threshold of -1 turns
+    * every driver path off, as it turns off broadcast joins. Reads the
+    * analyzed schema only: plans no job.
+    */
+  def driverSized(df: DataFrame, rows: Long): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output) * rows <= threshold
+  }
 
   /** [[materialize]] `steps` applied one after another to `df`, and
     * count the rows of `df` and of each step's output in the same job:

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -173,28 +172,6 @@ class DedupSpec extends SparkSpec {
     est((1L, 2L)) shouldBe 1.0
     est.values.foreach(e => e should (be >= 0.0 and be <= 1.0))
   }
-
-  /** `Dedup.components` runs on the driver when the mirrored edge list is
-    * broadcast-sized (every graph here is, at the session's threshold) and
-    * as distributed rounds when `spark.sql.autoBroadcastJoinThreshold` is
-    * -1, which is set only around the call. Checks that the named path ran:
-    * only the driver path returns a local relation.
-    */
-  private def onPath(path: String)(call: => DataFrame): DataFrame = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val comp = path match {
-      case "driver" => call
-      case "distributed" =>
-        val saved = spark.conf.getOption(key)
-        spark.conf.set(key, "-1")
-        try call finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    }
-    val local = comp.queryExecution.analyzed.isInstanceOf[LocalRelation]
-    withClue(s"$path path ran: ") { local shouldBe (path == "driver") }
-    comp
-  }
-
-  private val paths = Seq("driver", "distributed")
 
   private def longComponents(comp: DataFrame): Map[Long, Long] =
     comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

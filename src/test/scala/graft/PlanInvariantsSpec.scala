@@ -140,6 +140,9 @@ object PlanInvariantsSpec {
     * allowlisted here.
     */
   private val broadcastModelBounded: Map[String, String] = Map(
+    // q101/q310: apply only on PageRank's distributed side; an edge list
+    // that passes Frames.driverSized (every fixture up to sf0.01) runs on
+    // the driver and plans no broadcast at all
     "q101_pagerank" ->
       ("rank/degree vectors over the SUPPLIER vertex set (|V| = dim-" +
         "sized, ~1000× smaller than the edge fact); broadcasting keeps " +

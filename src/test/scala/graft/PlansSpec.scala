@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -341,8 +342,13 @@ class PlansSpec extends SparkSpec {
         p should include("SortMergeJoin")
       }
       // and the model-bounded default DOES broadcast (one map-side join
-      // per iteration): the two modes must stay distinct
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      // per iteration): the two modes must stay distinct. A threshold one
+      // byte under the edge list's size estimate keeps this 6-edge graph
+      // off the driver path (Frames.driverSized) and on the distributed
+      // rounds, where the broadcast() hint still forces the broadcast.
+      val estimate = EstimationUtils.getSizePerRow(
+        edges.queryExecution.analyzed.output) * edges.count()
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (estimate - 1).toString)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       val pb = graft.graph.PageRank.run(edges, iters = 2,
           broadcastRanks = true)

@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -30,6 +31,34 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The two paths of the graph kernels that share the driver-size rule
+    * (`Frames.driverSized`: `Dedup.components`, `PageRank.run`,
+    * `PageRank.runPersonalized`).
+    */
+  val paths: Seq[String] = Seq("driver", "distributed")
+
+  /** Runs `call` on the named path: the driver path at the session's
+    * threshold (every graph in the specs is broadcast-sized), the
+    * distributed one with `spark.sql.autoBroadcastJoinThreshold` at -1,
+    * which is set only around the call. Checks that the named path ran:
+    * only the driver path returns a plan whose leaves are all local
+    * relations (the distributed paths read checkpoints).
+    */
+  def onPath(path: String)(call: => DataFrame): DataFrame = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val out = path match {
+      case "driver" => call
+      case "distributed" =>
+        val saved = spark.conf.getOption(key)
+        spark.conf.set(key, "-1")
+        try call finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    val local = out.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    withClue(s"$path path ran: ") { local shouldBe (path == "driver") }
+    out
+  }
 
   /** The start events of the Spark jobs `body` runs: a marker job after it
     * drains the (asynchronous, FIFO) listener bus up to the end of `body`.

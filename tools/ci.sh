@@ -23,6 +23,15 @@ if grep -rn '\.read\.parquet(' src/main/scala; then
   fail=1
 fi
 
+echo "== one driver-size rule for the graph kernels"
+# Dedup.components and both PageRank entry points choose their driver path
+# through graft.ops.Frames.driverSized; a second estimate elsewhere would
+# let the kernels drift apart
+if grep -rn 'getSizePerRow' src/main/scala | grep -v '^src/main/scala/graft/ops/Frames.scala:'; then
+  echo "FAIL: getSizePerRow outside Frames.driverSized (use graft.ops.Frames.driverSized)"
+  fail=1
+fi
+
 echo "== benchmark harness tests (negative controls)"
 pb_out=$(python3 -m unittest perfbench/test_perfbench.py 2>&1); pb_rc=$?
 echo "$pb_out" | tail -3
@@ -56,10 +65,10 @@ echo "$oracle001_out" | tail -1
 [ $oracle001_rc -ne 0 ] && { echo "FAIL: oracle gate sf0.001 (rc=$oracle001_rc)"; echo "$oracle001_out" | grep ^FAIL | head -5; fail=1; }
 
 echo "== correctness vs DuckDB oracle at sf0.001, broadcast joins off"
-# the large side of Spark's broadcast switch: every join sort-merges and
-# Dedup.components takes its distributed path, which the small fixtures
-# otherwise never reach (a Spark conf read from the JVM's system
-# properties, not a graft setting)
+# the large side of Spark's broadcast switch: every join sort-merges, and
+# Dedup.components and PageRank's run/runPersonalized take their
+# distributed rounds, which the small fixtures otherwise never reach (a
+# Spark conf read from the JVM's system properties, not a graft setting)
 outnb=$(mktemp -d)
 GRAFT_JAVA_OPTS=-Dspark.sql.autoBroadcastJoinThreshold=-1 \
   tools/run.sh graft.Verify /root/testdata/sf0.001 "$outnb" 2>/dev/null >/dev/null
