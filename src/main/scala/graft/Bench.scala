@@ -152,7 +152,7 @@ object Bench {
       () => li.groupBy("l_linestatus")
         .agg(sum(col("l_quantity")).as("sq"),
           avg(col("l_discount")).as("ad"), count(lit(1)).as("n")),
-      () => plans.NativeTopK.topKPerGroup(
+      () => ops.Relational.topKPerGroup(
         li.select(col("l_suppkey"), col("l_extendedprice"),
           col("l_orderkey")),
         Seq(col("l_suppkey")),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.Decimal
 
 import graft.functions.{ArrayMath, DDSketchAgg, StringSim}
+import graft.plans.{TopKPerGroupStrategy, TopKRewrite}
 
 /** SQL-surface registration for the engine's custom expressions, two ways:
   *
@@ -23,12 +24,18 @@ import graft.functions.{ArrayMath, DDSketchAgg, StringSim}
   * ([[ArrayMath.UpperTriProducts]], the one-pass covariance kernel), and
   * the aggregate `graft_dd_sketch(v, gamma)` ([[DDSketchAgg]], the
   * mergeable quantile sketch as a SQL aggregate).
+  *
+  * The hook also injects [[TopKPerGroupStrategy]] and the [[TopKRewrite]]
+  * rule, so SQL's `row_number() OVER (...) <= k` plans the heap exec.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injections.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+    ext.injectOptimizerRule(_ => TopKRewrite)
+  }
 }
 
 object GraftFunctions {

@@ -47,22 +47,18 @@ object PageRank {
     * (no out-edges) are assumed absent — symmetrize the graph to
     * guarantee that — so the node set IS the distinct src set.
     *
-    * `broadcastRanks`: the rank and degree vectors are |nodes| rows —
-    * model-size when the graph's nodes are dimension-like (this query's
-    * part/supplier graph), in which case broadcasting them keeps each
-    * iteration a single map-side join + one shuffle (the dst aggregation).
-    * For web-scale graphs whose node set exceeds executor memory, pass
-    * false: the joins fall back to shuffle equi-joins co-partitioned on
-    * src and the iteration costs two shuffles instead of one.
-    *
     * Path selection: the edge list is materialized and counted in one job;
     * when it passes [[graft.ops.Frames.driverSized]] (and `iters > 0`) it
     * is collected and the rounds run on the driver, returning a local
     * relation with the same schema and rows as the distributed rounds
-    * below, which run otherwise (and then `broadcastRanks` applies).
+    * below, which run otherwise.
+    *
+    * There the rank and degree vectors (|nodes| rows) are broadcast by
+    * hint when they pass `driverSized` at the node count, so an iteration
+    * is one map-side join + one shuffle; past it (web scale, or a
+    * threshold of -1) the joins shuffle on src: two shuffles.
     */
-  def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      broadcastRanks: Boolean = true): DataFrame = {
+  def run(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     // Materialize the edge list ONCE: the caller's edge derivation is
     // typically a distinct over the fact table, and without this barrier
     // every iteration's join (plus deg below) would re-execute it — the
@@ -70,7 +66,7 @@ object PageRank {
     // k iterations into O(k) full fact-table scans.
     val (e, Seq(nEdges)) = materializeCounted(edges)
     if (iters > 0 && Collected.fits(e, nEdges)) runOnDriver(new Collected(e), iters, damping)
-    else runDistributed(e, iters, damping, broadcastRanks)
+    else runDistributed(e, iters, damping)
   }
 
   /** [[run]]'s rounds on the driver. The node count includes a null-src
@@ -85,8 +81,7 @@ object PageRank {
     g.frame(rank, g.nodeField)
   }
 
-  private def runDistributed(e: DataFrame, iters: Int, damping: Double,
-      broadcastRanks: Boolean): DataFrame = {
+  private def runDistributed(e: DataFrame, iters: Int, damping: Double): DataFrame = {
     // (node, deg) is consumed by every iteration — pin it. Its key set is
     // exactly the node set (no-dangling contract), so the rank vector
     // seeds from it and the node count is counted by the same job.
@@ -97,7 +92,7 @@ object PageRank {
     val (deg, Seq(n)) = materializeCounted(
       e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
     val base = (1.0 - damping) / n
-    def bc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
+    def bc(df: DataFrame): DataFrame = if (driverSized(df, n)) broadcast(df) else df
     var rank = deg.select(col("src").as("node"), lit(1.0 / n).as("pr"))
     for (it <- 1 to iters) {
       // round-then-cast at the SAME scale: a raw double cast to
@@ -105,8 +100,8 @@ object PageRank {
       // 1e-4 have ~20-digit exact expansions) where Spark (HALF_UP) and
       // DuckDB disagree by 1e-18; rounding to 12 decimals first makes the
       // decimal cast unambiguous on both engines (the UnigramLm pattern).
-      // Both small sides broadcast by request, not by estimation: the
-      // checkpointed frames carry no size stats, so the planner would
+      // Both node-sized sides broadcast by request, not by estimation:
+      // the checkpointed frames carry no size stats, so the planner would
       // otherwise sort-merge a fact-size edge list against a dim-size
       // rank vector every round.
       // The per-src contribution round(pr/deg, 12) depends only on the
@@ -139,13 +134,13 @@ object PageRank {
     * shape as [[run]] (one equi-join + one hash aggregation + a
     * seed-side union), same decimal-routed determinism; `seeds` is a
     * (node) frame, typically model-sized (broadcast with the rank
-    * vector via `broadcastRanks`). Nodes unreachable from the seeds
-    * simply never appear (score 0), so the output is the reached set —
+    * vector under [[run]]'s size rule). Nodes unreachable from the
+    * seeds simply never appear (score 0), so the output is the reached set —
     * at web scale that sparsity is the point. No-dangling contract as
     * in [[run]] (symmetrize the graph).
     */
   def runPersonalized(edges: DataFrame, iters: Int, seeds: DataFrame,
-      damping: Double = 0.85, broadcastRanks: Boolean = true): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     val (e, Seq(nEdges)) = materializeCounted(edges)
     val (sd, Seq(nSeeds)) =
       materializeCounted(seeds.select(col("node")).distinct().coalesce(4))
@@ -154,7 +149,7 @@ object PageRank {
     if (iters > 0 && Collected.fits(e, nEdges) && driverSized(sd, nSeeds) &&
         sd.schema("node").dataType == e.schema("dst").dataType)
       personalizedOnDriver(new Collected(e), sd, iters, damping)
-    else personalizedDistributed(e, sd, nSeeds, iters, damping, broadcastRanks)
+    else personalizedDistributed(e, sd, nSeeds, iters, damping)
   }
 
   /** [[runPersonalized]]'s rounds on the driver: the same `seeded ∪
@@ -182,11 +177,12 @@ object PageRank {
   }
 
   private def personalizedDistributed(e: DataFrame, sd: DataFrame, nSeeds: Long,
-      iters: Int, damping: Double, broadcastRanks: Boolean): DataFrame = {
-    val deg = materialize(
+      iters: Int, damping: Double): DataFrame = {
+    val (deg, Seq(n)) = materializeCounted(
       e.groupBy("src").agg(count(lit(1)).as("deg")).coalesce(4))
     val baseSeed = (1.0 - damping) / nSeeds
-    def bc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
+    val bound = math.max(n, nSeeds) // rows of any hinted frame
+    def bc(df: DataFrame): DataFrame = if (driverSized(df, bound)) broadcast(df) else df
     var rank = sd.select(col("node"), lit(1.0 / nSeeds).as("pr"))
     for (it <- 1 to iters) {
       // same round-then-decimal-sum discipline as run()'s contrib, and

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    one scan — k checks cost one pass, not k;
   *  - uniqueness rides the same pass as `count - count(distinct key)`;
   *  - referential integrity is the only extra job: a LEFT ANTI join,
-  *    broadcast when the parent key set is dimension-sized;
+  *    broadcast by Spark while the parent key set fits its threshold;
   *  - the report itself is k rows — driver-safe by construction.
   */
 object Expectations {
@@ -70,17 +70,16 @@ object Expectations {
     * as [[report]]: NON-NULL child keys with no parent. NULL child keys
     * are not violations (standard FK semantics, and the semantics of a
     * SQL `NOT IN` oracle, where a null key yields NULL and is never
-    * counted) — gate them with [[notNull]]. `broadcast` the parent side
-    * when it is dimension-sized (the child never re-shuffles: the anti
-    * join is map-side against the broadcast key set).
+    * counted) — gate them with [[notNull]]. The parent key set carries
+    * no hint: Spark broadcasts it while it fits the broadcast threshold
+    * (the anti join is then map-side and the child never re-shuffles)
+    * and shuffles both sides once it has outgrown it.
     */
   def refIntegrity(name: String, child: DataFrame, childKey: Column,
-                   parent: DataFrame, parentKey: Column,
-                   broadcastParent: Boolean = true): DataFrame = {
+                   parent: DataFrame, parentKey: Column): DataFrame = {
     val keys = parent.select(parentKey.as("_pk")).distinct()
-    val p = if (broadcastParent) broadcast(keys) else keys
     val orphans = child.where(childKey.isNotNull)
-      .join(p, childKey === col("_pk"), "left_anti")
+      .join(keys, childKey === col("_pk"), "left_anti")
     orphans.agg(count(lit(1)).as("violations"))
       .select(lit(name).as("check"),
         col("violations").cast("long").as("violations"),

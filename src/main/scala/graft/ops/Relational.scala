@@ -1,8 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+
+import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
 
 /** Core relational operators, re-expressed Spark-first.
   *
@@ -23,8 +27,8 @@ import org.apache.spark.sql.functions._
   *  - aggregates are plain `groupBy().agg()` — Catalyst plans
   *    partial (map-side) + final hash aggregation, so the shuffle carries
   *    only one row per (partition, key);
-  *  - top-k uses `row_number` over a partitioned window: a single hash
-  *    repartition by the group keys, no global sort;
+  *  - top-k keeps a size-k heap per group after a single hash
+  *    repartition by the group keys: no sort (SCALE.md "Windows / top-k");
   *  - nothing here collects to the driver.
   */
 object Relational {
@@ -58,16 +62,30 @@ object Relational {
       acc.join(dim, cond, "inner")
     }
 
-  /** Top-k rows per group, deterministic: ordering must include a unique
-    * tie-breaker (reference W1, `serving_layer.py:256-267` keeps top-100 per
-    * (MS, year)). Single shuffle on `partitionCols`.
+  /** The rows and 1-based `rankCol` of `row_number() OVER (PARTITION BY
+    * partitionCols ORDER BY order) <= k` (reference W1,
+    * `serving_layer.py:256-267` keeps top-100 per (MS, year)); `order` must
+    * end in a unique tie-breaker. Plans the bounded-heap
+    * [[graft.plans.TopKPerGroupExec]], installing its strategy on the session.
     */
   def topKPerGroup(df: DataFrame, partitionCols: Seq[Column],
                    order: Seq[Column], k: Int,
                    rankCol: String = "rank"): DataFrame = {
-    val w = Window.partitionBy(partitionCols: _*).orderBy(order: _*)
-    df.withColumn(rankCol, row_number().over(w))
-      .where(col(rankCol) <= k)
+    require(k > 0, s"k must be positive, got $k")
+    require(partitionCols.nonEmpty, "partitionCols must be non-empty")
+    TopKPerGroupStrategy.setup(df.sparkSession)
+    // Spark 4 Columns resolve only inside standard nodes: borrow a Sort
+    // (resolved SortOrders over the analyzed child) and a Project
+    // (resolved group expressions) from the analyzer.
+    val sorted = df.sortWithinPartitions(order: _*)
+      .queryExecution.analyzed.asInstanceOf[Sort]
+    val groups = df.select(partitionCols: _*)
+      .queryExecution.analyzed.asInstanceOf[Project].projectList.map {
+        case a: Alias => a.child
+        case e => e
+      }
+    GraftSqlBridge.ofRows(df.sparkSession, TopKPerGroup(groups, sorted.order, k,
+      AttributeReference(rankCol, IntegerType, nullable = false)(), sorted.child))
   }
 
   /** Year-over-year diff via self-join of per-year aggregates — mirrors the

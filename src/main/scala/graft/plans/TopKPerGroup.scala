@@ -3,19 +3,19 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.IntegerType
 
-/** Native top-k-per-group — a whole-operator Catalyst extension
-  * (logical node + planner strategy + physical operator), the tier the
-  * task reserves for semantics the built-in operators can't express
-  * EFFICIENTLY: `row_number() OVER (PARTITION BY g ORDER BY o) <= k`
-  * plans as Exchange → FULL SORT of every partition → Window → Filter,
+/** Top-k-per-group as a whole-operator Catalyst extension (logical
+  * node + planner strategy + physical operator): the plan of
+  * [[graft.ops.Relational.topKPerGroup]], which builds the node, and of
+  * the window form [[TopKRewrite]] rewrites. The window form,
+  * `row_number() OVER (PARTITION BY g ORDER BY o) <= k`, plans as
+  * Exchange → FULL SORT of every partition → Window → Filter,
   * materializing and ordering all n rows per group when only k survive.
   *
   * This operator keeps a SIZE-k BOUNDED HEAP per group instead:
@@ -25,55 +25,12 @@ import org.apache.spark.sql.types.IntegerType
   * copied. At 100 TB with k=3 and million-row groups, the window form
   * sorts ~10^6 rows/group; this touches k.
   *
-  * Semantics exactly match [[graft.ops.Relational.topKPerGroup]]
-  * (proven in PlansSpec and oracle-gated by q167): ties must be broken
-  * by a unique trailing order column, as with any row_number use.
-  */
-object NativeTopK {
-
-  /** Top-k rows per group with a 1-based `rankCol` appended — the
-    * drop-in replacement for the window row_number pattern. Installs
-    * the planner strategy on the session (idempotent).
-    */
-  def topKPerGroup(df: DataFrame, groupCols: Seq[Column], order: Seq[Column],
-                   k: Int, rankCol: String = "rank"): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.{Project, Sort}
-    require(k > 0, s"k must be positive, got $k")
-    require(groupCols.nonEmpty, "groupCols must be non-empty")
-    install(df.sparkSession)
-    // Resolve the caller's Columns by borrowing the analyzer: a Sort
-    // node gives resolved SortOrders (and the analyzed child with
-    // stable exprIds), a Project gives resolved group expressions.
-    // Spark 4's Column is a ColumnNode wrapper that only standard nodes
-    // resolve — handing unresolved wrappers to a custom node leaves
-    // them unresolved all the way to codegen.
-    val sortNode = df.sortWithinPartitions(order: _*)
-      .queryExecution.analyzed.asInstanceOf[Sort]
-    val child = sortNode.child
-    val groupNode = df.select(groupCols: _*)
-      .queryExecution.analyzed.asInstanceOf[Project]
-    val resolvedGroups = groupNode.projectList.map {
-      case a: Alias => a.child
-      case e => e
-    }
-    val node = TopKPerGroup(resolvedGroups, sortNode.order, k,
-      AttributeReference(rankCol, IntegerType, nullable = false)(), child)
-    GraftSqlBridge.ofRows(df.sparkSession, node)
-  }
-
-  /** Register the strategy on an existing session (idempotent) — also
-    * injectable at session build via `GraftExtensions` for cluster
-    * submission (`spark.sql.extensions=graft.plans.GraftExtensions`).
-    */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-}
-
-/** Logical node: output = child columns + the rank attribute. The rank
-  * attribute is a constructor field so plan copies keep its exprId
+  * Semantics are the window form's (proven against it in PlansSpec and
+  * oracle-gated by q05, q167 and q269): ties must be broken by a unique
+  * trailing order column, as with any row_number use.
+  *
+  * The logical node's output is the child columns + the rank attribute.
+  * The rank attribute is a constructor field so plan copies keep its exprId
   * stable (a body `val` would mint a fresh id per copy and orphan
   * downstream references).
   */
@@ -96,18 +53,14 @@ object TopKPerGroupStrategy extends SparkStrategy {
         planLater(t.child)) :: Nil
     case _ => Nil
   }
-}
 
-/** Session-extensions entry point for cluster submission: the planner
-  * strategy plus the [[TopKRewrite]] optimizer rule, so both the
-  * explicit API and the declarative `row_number`-filter form plan
-  * through the heap exec.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => TopKRewrite)
-  }
+  /** Add the strategy to a live session (idempotent). Sessions built
+    * with `spark.sql.extensions=graft.GraftExtensions` get it injected.
+    */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
 }
 
 /** Physical operator: requires the child clustered on the group keys
@@ -118,8 +71,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   * Memory: O(k × groups-per-partition) retained rows, with NO disk
   * spill — the right trade when k·|groups| per partition fits in
   * executor memory (the top-k-per-group norm). For pathologically many
-  * groups per partition, raise shuffle partitions or fall back to the
-  * window form, whose SortExec spills.
+  * groups per partition, raise shuffle partitions or write the window
+  * form by hand (no session graft builds rewrites it), whose SortExec
+  * spills.
+  * Group keys are float-normalized, as a window's partition keys are.
   */
 case class TopKPerGroupExec(
     groupExprs: Seq[Expression],
@@ -141,7 +96,7 @@ case class TopKPerGroupExec(
     val kk = k
     val outAttrs = output
     child.execute().mapPartitions({ iter =>
-      val keyProj = UnsafeProjection.create(g, childOutput)
+      val keyProj = UnsafeProjection.create(g.map(GraftSqlBridge.normalizeFloats), childOutput)
       val rowProj = UnsafeProjection.create(childOutput, childOutput)
       // Ascending comparator over the sort spec; the heap's head is the
       // WORST kept row (max under the spec).

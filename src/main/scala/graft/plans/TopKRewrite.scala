@@ -13,10 +13,10 @@ import org.apache.spark.sql.types.IntegerType
   * into the native [[TopKPerGroup]] node, so the declarative form users
   * actually write gets the bounded-heap physical operator instead of
   * Exchange → full Sort → Window → Filter. This is the [[Rule]] tier of
-  * the Catalyst extension ladder: [[NativeTopK.topKPerGroup]] is the
-  * explicit API; this rule makes the optimization transparent — any
-  * `row_number`-filter query in the session (including plain SQL) plans
-  * through the heap exec with no code change.
+  * the Catalyst extension ladder: [[graft.ops.Relational.topKPerGroup]]
+  * is the API graft's own code calls; this rule is the SQL surface for
+  * sessions that install it. graft's own sessions do not, so window code
+  * written by hand keeps its window plan there.
   *
   * Spark 3.5+ partially covers this with `InferWindowGroupLimit`, which
   * inserts map-/reduce-side group-limit passes but still fully sorts the
@@ -134,10 +134,10 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
   /** Install on a live session (idempotent): the rule joins the
     * experimental batch and the strategy must be present for the node to
     * plan. Cluster submission gets both from
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
+    * `spark.sql.extensions=graft.GraftExtensions`.
     */
   def install(spark: SparkSession): Unit = {
-    NativeTopK.install(spark)
+    TopKPerGroupStrategy.setup(spark)
     if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ TopKRewrite

@@ -409,11 +409,11 @@ object DepthQueries {
           .orderBy("purchase_id")
       }),
 
-    // Native top-k-per-group (graft.plans.NativeTopK): the custom
+    // Top-k-per-group over a join (Relational.topKPerGroup): the custom
     // Catalyst logical node + planner strategy + physical operator —
     // size-k bounded heaps after ONE hash shuffle, no full per-group
     // sort, no window buffering (see plans/TopKPerGroup.scala). Same
-    // semantics as q05's window form; the oracle is the window SQL.
+    // semantics as the window form; the oracle is the window SQL.
     Q("q167_native_topk", Q.sql("""
         SELECT c_mktsegment, o_orderkey, o_totalprice, rank FROM (
           SELECT c_mktsegment, o_orderkey, o_totalprice,
@@ -426,7 +426,7 @@ object DepthQueries {
           .join(T(s, dir, "customer"),
             col("o_custkey") === col("c_custkey"))
           .select("c_mktsegment", "o_orderkey", "o_totalprice")
-        graft.plans.NativeTopK.topKPerGroup(joined, Seq(col("c_mktsegment")),
+        graft.ops.Relational.topKPerGroup(joined, Seq(col("c_mktsegment")),
             Seq(col("o_totalprice").desc, col("o_orderkey")), k = 5)
           .orderBy("c_mktsegment", "rank")
       }),

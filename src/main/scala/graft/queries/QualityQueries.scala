@@ -250,11 +250,10 @@ object QualityQueries {
           inSet("03_lineitem_returnflag_set", col("l_returnflag"), Seq("A", "N", "R")),
           inRange("04_lineitem_quantity_range", col("l_quantity"), 1, 50)))
         val uniq = report(o, Seq(unique("05_orders_key_unique", col("o_orderkey"))))
-        // orders keys are FACT-sized — no broadcast; the anti join
-        // shuffles on the key (AQE still broadcasts while it fits)
+        // orders keys are FACT-sized: Spark broadcasts them only while
+        // they fit the threshold and shuffles on the key beyond it
         val ri = refIntegrity("06_lineitem_orders_ri",
-          li, col("l_orderkey"), o, col("o_orderkey"),
-          broadcastParent = false)
+          li, col("l_orderkey"), o, col("o_orderkey"))
         rowChecks.union(uniq).union(ri)
           .withColumnRenamed("check", "check_name")
           .orderBy("check_name")

@@ -11,6 +11,10 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `e` with -0.0 as 0.0 and one NaN, as grouping keys are normalized. */
+  def normalizeFloats(e: Expression): Expression =
+    catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Build a DataFrame over a custom logical plan (`Dataset.ofRows` is
     * `private[sql]`) — the entry point for library-constructed plan
     * nodes like [[graft.plans.TopKPerGroup]].

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Aggregators
@@ -71,6 +71,31 @@ class FunctionsSpec extends SparkSpec {
     // spark.sql.extensions=graft.GraftExtensions): apply must register
     // without error on a fresh extensions container
     noException should be thrownBy new GraftExtensions()(new SparkSessionExtensions)
+    // and a session built with it gets the functions, the top-k planner
+    // strategy and the TopKRewrite rule: a hand-written row_number
+    // filter plans through the heap exec. The builder makes a new
+    // session on the shared context; the shared session stays active.
+    val s2 = org.apache.spark.sql.classic.SparkSession.builder()
+      .withExtensions(new GraftExtensions()).create()
+    try {
+      s2.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+        .head().getDouble(0) shouldBe 11.0
+      val topk = s2.sql("""SELECT * FROM (
+          SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v DESC) AS rank
+          FROM VALUES (1, 1.0D), (1, 2.0D), (2, 3.0D) AS t(g, v)) WHERE rank <= 1""")
+      val plan = topk.queryExecution.executedPlan.toString
+      plan should include("TopKPerGroup [")
+      plan should not include "Window"
+      topk.collect().map(r => (r.getInt(0), r.getDouble(1))).toSet shouldBe
+        Set((1, 2.0), (2, 3.0))
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
+    spark.sql("""SELECT * FROM (
+        SELECT g, row_number() OVER (PARTITION BY g ORDER BY v) AS rank
+        FROM VALUES (1, 1.0D) AS t(g, v)) WHERE rank <= 1""")
+      .queryExecution.executedPlan.toString should include("Window")
   }
 
   test("md5PrefixLong equals the hex/conv chain, codegen and interpreted") {

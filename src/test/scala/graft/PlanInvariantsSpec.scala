@@ -147,12 +147,13 @@ object PlanInvariantsSpec {
       ("rank/degree vectors over the SUPPLIER vertex set (|V| = dim-" +
         "sized, ~1000× smaller than the edge fact); broadcasting keeps " +
         "each iteration one shuffle instead of two. The web-scale path " +
-        "is the documented broadcastRanks=false switch in PageRank.run. " +
+        "is PageRank's size rule: a vector past Frames.driverSized at " +
+        "the node count gets no hint. " +
         "Measured rows (round 12): 1,000 at sf0.1; 10,000 on the 10× " +
         "fixture — KBs per executor either way"),
     "q310_trustrank" ->
-      ("same rank-vector pattern, the same broadcastRanks=false " +
-        "scale switch, and the same measured 1k/10k supplier rows " +
+      ("same rank-vector pattern, the same Frames.driverSized " +
+        "size rule, and the same measured 1k/10k supplier rows " +
         "as q101 (TrustRank reuses PageRank's iteration)"),
     "q256_knn_label_eval" ->
       ("deliberate leave-one-out brute-force kNN EVAL: the query side " +

@@ -1,12 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.ops.Relational
-import graft.plans.NativeTopK
 
 /** Custom plan nodes: the native top-k-per-group operator. */
 class PlansSpec extends SparkSpec {
@@ -158,6 +159,19 @@ class PlansSpec extends SparkSpec {
       .count(_ == "BroadcastNestedLoopJoin") shouldBe 1
   }
 
+  /** The window form `Relational.topKPerGroup` replaced:
+    * `row_number() OVER (PARTITION BY g ORDER BY order) <= k`.
+    */
+  private def windowTopK(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(col("g")).orderBy(order: _*)))
+      .where(col("rank") <= k)
+
+  /** `Relational.topKPerGroup` and [[windowTopK]] over `df`, as sets. */
+  private def bothForms(df: DataFrame, order: Seq[Column], k: Int): (Set[Row], Set[Row]) =
+    (Relational.topKPerGroup(df, Seq(col("g")), order, k).collect().toSet,
+      windowTopK(df, order, k).collect().toSet)
+
   test("NativeTopK equals the window row_number form on generated data") {
     val rows = Gen.nonEmptyListOf(Gen.zip(
       Gen.chooseNum(0, 4), Gen.chooseNum(0, 50)))
@@ -166,24 +180,15 @@ class PlansSpec extends SparkSpec {
       val df = xs.zipWithIndex.map { case ((g, v), i) => (g, v.toDouble, i.toLong) }
         .toDF("g", "v", "id")
       for (k <- Seq(1, 3)) {
-        val native = NativeTopK.topKPerGroup(df, Seq(col("g")),
-            Seq(col("v").desc, col("id")), k)
-          .select("g", "v", "id", "rank")
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2), r.getInt(3)))
-          .toSet
-        val window = Relational.topKPerGroup(df, Seq(col("g")),
-            Seq(col("v").desc, col("id")), k)
-          .select("g", "v", "id", "rank")
-          .collect().map(r => (r.getInt(0), r.getDouble(1), r.getLong(2), r.getInt(3)))
-          .toSet
-        native shouldBe window
+        val (heap, window) = bothForms(df, Seq(col("v").desc, col("id")), k)
+        heap shouldBe window
       }
     }
   }
 
   test("NativeTopK plans the custom exec with no Sort and no Window") {
     val df = Seq((1, 10.0, 1L), (1, 20.0, 2L), (2, 5.0, 3L)).toDF("g", "v", "id")
-    val out = NativeTopK.topKPerGroup(df, Seq(col("g")),
+    val out = Relational.topKPerGroup(df, Seq(col("g")),
       Seq(col("v").desc, col("id")), 1)
     // the exec node prints without its Exec suffix; the plan is ONE
     // hash exchange + the custom operator — no Sort, no Window
@@ -193,24 +198,90 @@ class PlansSpec extends SparkSpec {
     plan should not include "Window"
     plan should not include "Sort"
     out.count() shouldBe 2
+    // the window form written by hand still plans as a window: the
+    // shared session installs the strategy, not the rewrite rule
+    windowTopK(df, Seq(col("v").desc, col("id")), 1)
+      .queryExecution.executedPlan.toString should include("Window")
   }
 
   test("NativeTopK survives downstream use (filter, orderBy, agg on rank)") {
     val df = Seq((1, 10.0, 1L), (1, 20.0, 2L), (1, 5.0, 3L), (2, 9.0, 4L))
       .toDF("g", "v", "id")
-    val out = NativeTopK.topKPerGroup(df, Seq(col("g")),
+    val top = Relational.topKPerGroup(df, Seq(col("g")),
         Seq(col("v").desc, col("id")), 2)
+    val out = top
       .where(col("rank") === 1)
       .orderBy("g")
       .select("g", "v")
       .collect().map(r => (r.getInt(0), r.getDouble(1)))
     out.toSeq shouldBe Seq((1, 20.0), (2, 9.0))
+    top.groupBy("g").agg(max("rank")).collect().toSet shouldBe
+      windowTopK(df, Seq(col("v").desc, col("id")), 2)
+        .groupBy("g").agg(max("rank")).collect().toSet
   }
 
   test("NativeTopK emits fewer than k rows for small groups") {
     val df = Seq((1, 1.0, 1L)).toDF("g", "v", "id")
-    NativeTopK.topKPerGroup(df, Seq(col("g")),
+    Relational.topKPerGroup(df, Seq(col("g")),
       Seq(col("v"), col("id")), 5).count() shouldBe 1
+  }
+
+  test("topKPerGroup on an empty input is empty, with the window form's schema") {
+    val df = Seq.empty[(Int, Double, Long)].toDF("g", "v", "id")
+    val out = Relational.topKPerGroup(df, Seq(col("g")), Seq(col("v"), col("id")), 3)
+    out.schema shouldBe windowTopK(df, Seq(col("v"), col("id")), 3).schema
+    out.collect() shouldBe empty
+  }
+
+  test("topKPerGroup with k larger than every group keeps every row, ranked") {
+    val df = Seq((1, 3.0, 1L), (1, 1.0, 2L), (2, 2.0, 3L), (3, 5.0, 4L),
+      (3, 5.0, 5L), (3, 4.0, 6L)).toDF("g", "v", "id")
+    val (heap, window) = bothForms(df, Seq(col("v").desc, col("id")), 100)
+    heap shouldBe window
+    heap.size shouldBe 6
+  }
+
+  test("topKPerGroup groups null keys together and orders null values as the window does") {
+    val df = Seq[(Option[Int], Option[Double], Long)](
+        (None, Some(2.0), 1L), (None, None, 2L), (None, Some(7.0), 3L),
+        (Some(1), None, 4L), (Some(1), Some(1.0), 5L), (Some(1), None, 6L),
+        (Some(2), Some(3.0), 7L))
+      .toDF("g", "v", "id")
+    // asc puts nulls first and desc puts them last; both sides must agree
+    for (order <- Seq(Seq(col("v").asc, col("id")), Seq(col("v").desc, col("id")),
+        Seq(col("v").desc_nulls_first, col("id").desc)); k <- Seq(1, 2)) {
+      val (heap, window) = bothForms(df, order, k)
+      heap shouldBe window
+    }
+    // -0.0 and 0.0 are one group key, as in a window partition
+    val zeros = Seq((0.0, 1.0, 1L), (-0.0, 2.0, 2L), (1.5, 3.0, 3L)).toDF("g", "v", "id")
+    val (heap, window) = bothForms(zeros, Seq(col("v").desc, col("id")), 1)
+    heap.map(_.getLong(2)) shouldBe window.map(_.getLong(2))
+    heap.size shouldBe 2
+  }
+
+  test("topKPerGroup keeps the k best of one hot 10k-row group") {
+    val df = spark.range(10000).select(
+        when(col("id") < 9990, lit(0)).otherwise(col("id").cast("int")).as("g"),
+        ((col("id") * 7919) % 10007).cast("double").as("v"), col("id"))
+      .repartition(3)
+    val (heap, window) = bothForms(df, Seq(col("v").desc, col("id")), 5)
+    heap shouldBe window
+    heap.count(_.getInt(0) == 0) shouldBe 5
+  }
+
+  test("topKPerGroup over a one-partition Footers.read input plans no exchange") {
+    val path = tmpDir("topk-footers") + "/t.parquet"
+    Seq((1, 10.0, 1L), (1, 20.0, 2L), (2, 5.0, 3L), (2, 6.0, 4L))
+      .toDF("g", "v", "id").write.parquet(path)
+    val in = graft.io.Footers.read(spark, path)
+    in.rdd.getNumPartitions shouldBe 1
+    val out = Relational.topKPerGroup(in, Seq(col("g")), Seq(col("v").desc, col("id")), 1)
+    // the exec node prints without its Exec suffix
+    val plan = out.queryExecution.executedPlan.toString
+    plan should include("TopKPerGroup [")
+    plan should not include "Exchange"
+    out.select("id").collect().map(_.getLong(0)).toSet shouldBe Set(2L, 4L)
   }
 
   test("q334 label join degrades to a shuffle when broadcast estimates are off") {
@@ -320,11 +391,12 @@ class PlansSpec extends SparkSpec {
 
   test("PageRank broadcastRanks=false plans shuffle joins — the web-scale fallback") {
     // Same recipe as the q334 pin: the documented degrade path
-    // (PageRank.scala broadcastRanks) must actually degrade. With the
-    // toggle off and size-estimation broadcasts disabled, every
-    // per-iteration join (rank ⋈ edges ⋈ deg) must be a co-partitioned
-    // shuffle join — a broadcast() hint on the rank/deg side would
-    // override the thresholds and turn this red; so would a cartesian.
+    // (PageRank.scala's distributed rounds) must actually degrade. With
+    // broadcasts off (threshold -1), no node vector passes
+    // Frames.driverSized, so every per-iteration join (rank ⋈ edges ⋈
+    // deg) must be a co-partitioned shuffle join — a broadcast() hint on
+    // the rank/deg side would override the thresholds and turn this red;
+    // so would a cartesian.
     spark.catalog.clearCache()
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -332,8 +404,7 @@ class PlansSpec extends SparkSpec {
     try {
       val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L),
         (1L, 3L), (3L, 1L)).toDF("src", "dst")
-      val p = graft.graph.PageRank.run(edges, iters = 2,
-          broadcastRanks = false)
+      val p = graft.graph.PageRank.run(edges, iters = 2)
         .queryExecution.executedPlan.toString
       withClue("PageRank fallback plan:") {
         p should not include "BroadcastHashJoin"
@@ -345,13 +416,13 @@ class PlansSpec extends SparkSpec {
       // per iteration): the two modes must stay distinct. A threshold one
       // byte under the edge list's size estimate keeps this 6-edge graph
       // off the driver path (Frames.driverSized) and on the distributed
-      // rounds, where the broadcast() hint still forces the broadcast.
+      // rounds, where the 3-node rank/degree vectors do pass the rule and
+      // their broadcast() hint forces the broadcast.
       val estimate = EstimationUtils.getSizePerRow(
         edges.queryExecution.analyzed.output) * edges.count()
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (estimate - 1).toString)
       spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      val pb = graft.graph.PageRank.run(edges, iters = 2,
-          broadcastRanks = true)
+      val pb = graft.graph.PageRank.run(edges, iters = 2)
         .queryExecution.executedPlan.toString
       pb should include("BroadcastHashJoin")
     } finally {

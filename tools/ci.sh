@@ -32,6 +32,18 @@ if grep -rn 'getSizePerRow' src/main/scala | grep -v '^src/main/scala/graft/ops/
   fail=1
 fi
 
+echo "== one top-k path"
+# graft's top-k-per-group plan node is built by Relational.topKPerGroup
+# (the API) and by the TopKRewrite rule (the SQL surface) only; a third
+# construction site would be a second top-k path
+if grep -rn 'TopKPerGroup(' src/main/scala \
+    | grep -v '^src/main/scala/graft/ops/Relational.scala:' \
+    | grep -v '^src/main/scala/graft/plans/TopKRewrite.scala:' \
+    | grep -v 'case class TopKPerGroup('; then
+  echo "FAIL: TopKPerGroup constructed outside Relational.topKPerGroup and TopKRewrite"
+  fail=1
+fi
+
 echo "== benchmark harness tests (negative controls)"
 pb_out=$(python3 -m unittest perfbench/test_perfbench.py 2>&1); pb_rc=$?
 echo "$pb_out" | tail -3
